@@ -4,10 +4,11 @@ import java.time.{LocalDate, LocalDateTime}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
-import graft.operators.{InventoryPipeline, MergeOps}
+import graft.operators.{InventoryPipeline, MergeOps, PartitionedMerge}
 import graft.silver.Flatten
 import graft.sources.{AtomicTableWriter, RawReader}
 import graft.state.EtlRunLog
@@ -68,9 +69,12 @@ object Orchestrator {
 
 /** O1–O3/O7 — the daily pipeline (daily_scheduler.py:150-218) re-shaped
   * for Spark: parallel staging fan-out per (store × entity), an
-  * all-staged-or-abort gate, then serial merges into the gold tables.
+  * all-staged-or-abort gate, then merges into the gold tables. The
+  * entities merge serially (orders → customers → products), but within
+  * one entity the gold tables that read only silver merge side by side
+  * (W1 beside W2; W4, W5 and the W6 → W7 chain).
   *
-  * The thread pool exists to overlap independent *jobs* (each Spark
+  * The thread pools exist to overlap independent *jobs* (each Spark
   * action is already cluster-parallel inside); SparkSession is
   * thread-safe so the reference's connection-per-call dance
   * (daily_scheduler.py:23) has no equivalent here.
@@ -156,10 +160,16 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
   /** A gold table created by an earlier release WITHOUT bucketing (no
     * `bucket` column) must keep the whole-table merge path — stamping
     * buckets onto it would fail (and rebuilding is the operator's
-    * call). Fresh tables are created bucketed. */
-  private def bucketPathUsable(table: String): Boolean =
-    AtomicTableWriter.read(spark, goldPath(table))
-      .forall(_.columns.contains("bucket"))
+    * call). Fresh tables are created bucketed. Answered from the
+    * filesystem: the table is absent, or carries the bucket-count
+    * sidecar or `bucket=` directories. */
+  private def bucketPathUsable(table: String): Boolean = {
+    val root = new Path(goldPath(table))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    !fs.exists(root) ||
+      fs.exists(new Path(root, PartitionedMerge.BucketMeta)) ||
+      fs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
+  }
 
   /** R∪W staging view; degenerates to one side when the other is absent
     * (run_etl_with_retries.py:41-44). */
@@ -168,11 +178,24 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
     if (frames.isEmpty) None else Some(MergeOps.combineStores(frames))
   }
 
-  /** PHASE 2 — the seven merge jobs, serial, per entity
+  /** Run independent merge branches side by side, each on a thread
+    * created here so it inherits the caller's Spark job group. Returns
+    * only after every branch has finished, rethrowing the first failure
+    * in branch order — so a retry never overlaps a write still running
+    * from the failed attempt. */
+  private def sideBySide(branches: (() => Unit)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(branches.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val results = try branches.map(b => Future(Try(b()))).map(Await.result(_, Duration.Inf))
+    finally pool.shutdown() // non-daemon threads must not pin the JVM
+    results.foreach(_.get)
+  }
+
+  /** PHASE 2 — the seven merge jobs, serial per entity, the independent
+    * tables of one entity side by side
     * (run_etl_with_retries.py:46-96; run_logs.txt:1613-1619). */
-  def mergeOrders(ingestedAt: String): Unit = {
-    import graft.operators.PartitionedMerge
-    combined("fact_orders").foreach { staged0 =>
+  def mergeOrders(ingestedAt: String): Unit = sideBySide(
+    () => combined("fact_orders").foreach { staged0 =>
       // a bronze batch can carry several versions of one order (overlap
       // lookback / multiple files); MergeOps.upsert requires key-unique
       // staged input — keep the latest with a total tie-break order
@@ -192,8 +215,8 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
           }
           write(merged, goldPath("fact_orders"))
       }
-    }
-    combined("fact_order_items").foreach { items0 =>
+    },
+    () => combined("fact_order_items").foreach { items0 =>
       // same-version item rows can repeat across batch files; exact
       // duplicates collapse, and per (order_id, line_item_id) keep a
       // deterministic survivor (reference semantics load one file per
@@ -216,8 +239,7 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
           }
           write(merged, goldPath("fact_order_items"))
       }
-    }
-  }
+    })
 
   def mergeCustomers(ingestedAt: String): Unit =
     combined("dim_customers").foreach { staged =>
@@ -225,12 +247,15 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
         goldPath("dim_customers"))
     }
 
-  def mergeProducts(ingestedAt: String): Unit = {
-    combined("dim_products").foreach(s =>
-      write(s.withColumn("ingested_at", lit(ingestedAt)), goldPath("dim_products")))
-    combined("dim_product_variants").foreach(s =>
-      write(s.withColumn("ingested_at", lit(ingestedAt)), goldPath("dim_product_variants")))
+  def mergeProducts(ingestedAt: String): Unit = sideBySide(
+    () => combined("dim_products").foreach(s =>
+      write(s.withColumn("ingested_at", lit(ingestedAt)), goldPath("dim_products"))),
+    () => combined("dim_product_variants").foreach(s =>
+      write(s.withColumn("ingested_at", lit(ingestedAt)), goldPath("dim_product_variants"))),
+    () => mergeInventory(ingestedAt))
 
+  /** W6 → W7: W7 snapshots W6's merged output, so the two stay in order. */
+  private def mergeInventory(ingestedAt: String): Unit = {
     // W6 — retail-first inventory pipeline
     val perStore = stores.flatMap { case (st, _) =>
       for {
@@ -240,7 +265,6 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
       } yield InventoryPipeline.storeInventory(inv, vars, prods, st)
     }
     if (perStore.nonEmpty) {
-      import graft.operators.PartitionedMerge
       val current = perStore.reduce(InventoryPipeline.combine)
         .withColumn("ingested_at", lit(ingestedAt))
       // W6 merges through the same bucketed path as the facts (W1/W2):

@@ -56,8 +56,9 @@ object MergeOps {
 
   /** W7 — idempotent snapshot append: upsert on (keys..., snapshot key)
     * so a same-day re-run overwrites rather than duplicates
-    * (run_logs.txt:455-461). On a date-partitioned table this is a
-    * dynamic partition overwrite of today's partition only. */
+    * (run_logs.txt:455-461). The result is the whole snapshot table:
+    * `Orchestrator` rewrites all of `inventory_snapshot` with it through
+    * [[graft.sources.AtomicTableWriter]], partitioned by snapshot date. */
   def snapshotAppend(snapshots: DataFrame, todays: DataFrame, keys: Seq[String]): DataFrame =
     upsert(snapshots, todays, keys)
 

@@ -50,7 +50,7 @@ object PartitionedMerge {
 
   /** Sidecar file pinning a bucketed table's bucket count. Underscore
     * prefix → invisible to Spark's file listing. */
-  private val BucketMeta = "_graft_buckets"
+  val BucketMeta = "_graft_buckets"
 
   def readBucketCount(spark: SparkSession, targetPath: String): Option[Int] = {
     val p = new Path(targetPath, BucketMeta)
@@ -151,11 +151,9 @@ object PartitionedMerge {
       // partition-pruned scan: only directories for touched values are read
       .filter(col(partCol).cast("string").isin(parts: _*))
     val merged = MergeOps.upsert(target.select(staged.columns.map(col): _*), staged, keys)
-    withDynamicOverwrite(spark) {
-      merged.write.mode("overwrite").partitionBy(partCol)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(targetPath)
-    }
+    merged.write.mode("overwrite").partitionBy(partCol)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(targetPath)
     parts
   }
 
@@ -175,21 +173,9 @@ object PartitionedMerge {
     val merged = MergeOps.deleteReload(
       target.select(stagedRows.columns.map(col): _*),
       stagedRows, stagedRows.select(keys.map(col): _*), keys)
-    withDynamicOverwrite(spark) {
-      merged.write.mode("overwrite").partitionBy(partCol)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(targetPath)
-    }
+    merged.write.mode("overwrite").partitionBy(partCol)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(targetPath)
     parts
-  }
-
-  private def withDynamicOverwrite[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try f finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

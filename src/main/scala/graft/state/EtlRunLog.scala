@@ -2,15 +2,14 @@ package graft.state
 
 import java.time.{LocalDate, LocalDateTime}
 import java.time.format.DateTimeFormatter
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 /** O4/O5 — run-status + watermark state table (`etl_run_log`,
   * daily_scheduler.py:24-83; columns per FIXTURES.md §6).
   *
-  * A small driver-side state table: append-per-event parquet, latest
-  * status resolved by max(id) per run. At scale this stays tiny (rows =
-  * runs × entities), so a coalesce(1) append is fine.
+  * A small driver-side state table: append-per-event parquet, one part
+  * file per event, latest status resolved by max(id) per run.
   */
 object EtlRunLog {
   val ISO: DateTimeFormatter = DateTimeFormatter.ISO_LOCAL_DATE_TIME
@@ -20,32 +19,89 @@ object EtlRunLog {
                  stagingSuccess: Boolean, sourceUpdatedAt: Option[String],
                  mergeSuccess: Boolean, notes: Option[String])
 
+  private val RunSchema = Encoders.product[Run].schema
+
+  /** The run log at `path`, answered from an in-process index of its
+    * rows — the role the reference's indexed Postgres `etl_run_log`
+    * played — so a run-log read costs a directory listing, not a Spark
+    * job, however long the history grows.
+    *
+    * Every call lists the directory and reads, with the known schema,
+    * only the part files the index has not seen; another writer's
+    * appends are therefore picked up on the next call. After its own
+    * append the Store adopts the one new part file without reading it
+    * back. A seen file that disappeared makes it reload from scratch.
+    *
+    * The index assumes one writer lock per Store: every read and write
+    * of this Store is serialized through it. Two Stores on one path see
+    * each other's appends, but their appends are not serialized against
+    * each other (ids can collide), as before the index.
+    */
   final class Store(spark: SparkSession, path: String) {
     import spark.implicits._
 
     /** Parquet appends are not concurrency-safe (shared `_temporary`
       * staging dir); the reference leaned on Postgres for this. All
-      * writes are serialized through this lock — contention is nil for
-      * a control-plane table. */
+      * writes — and the index they update — are serialized through this
+      * lock; contention is nil for a control-plane table. */
     private val writeLock = new Object
+    private val dir = new Path(path)
+    private val fs: FileSystem =
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    def all(): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(path)
-      else spark.emptyDataset[Run].toDF()
+    /** Part files the index holds, and their rows. Guarded by writeLock. */
+    private var seen = Set.empty[String]
+    private var rows = Vector.empty[Run]
+
+    private def partFiles(): Set[String] =
+      if (!fs.exists(dir)) Set.empty
+      else fs.listStatus(dir).iterator
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(_.getPath.toString).toSet
+
+    private def read(files: Set[String]): Vector[Run] =
+      if (files.isEmpty) Vector.empty
+      else spark.read.schema(RunSchema).parquet(files.toSeq.sorted: _*)
+        .as[Run].collect().toVector
+
+    /** Bring the index in line with the part files on disk. */
+    private def refresh(): Unit = {
+      val onDisk = partFiles()
+      if (!seen.subsetOf(onDisk)) {
+        rows = read(onDisk)
+        seen = onDisk
+      } else if (onDisk.size > seen.size) {
+        rows ++= read(onDisk -- seen)
+        seen = onDisk
+      }
     }
 
-    private def append(run: Run): Unit =
-      Seq(run).toDF().coalesce(1).write.mode("append").parquet(path)
+    /** The index's rows, current with the part files on disk. */
+    def runs(): Seq[Run] = writeLock.synchronized { refresh(); rows }
 
-    private def nextId(): Long =
-      all().agg(coalesce(max($"id"), lit(0L))).head().getLong(0) + 1
+    /** The rows on disk, read with the known schema. */
+    def all(): DataFrame =
+      if (fs.exists(dir)) spark.read.schema(RunSchema).parquet(path)
+      else spark.emptyDataset[Run].toDF()
+
+    /** One-row append; the new part file is adopted without a read when
+      * it is the only one that appeared. Caller holds writeLock and has
+      * just refreshed the index. */
+    private def append(run: Run): Unit = {
+      Seq(run).toDF().coalesce(1).write.mode("append").parquet(path)
+      val onDisk = partFiles()
+      if (seen.subsetOf(onDisk) && onDisk.size == seen.size + 1) {
+        rows :+= run
+        seen = onDisk
+      } else refresh()
+    }
 
     /** Insert a RUNNING row, returning its id (daily_scheduler.py:24-36). */
     def logStart(store: String, entity: String, now: LocalDateTime): Long =
       writeLock.synchronized {
-        val id = nextId()
+        refresh()
+        val id = if (rows.isEmpty) 1L else rows.map(_.id).max + 1
         append(Run(id, store, entity, "RUNNING", now.format(ISO),
           stagingSuccess = false, None, mergeSuccess = false, None))
         id
@@ -64,8 +120,8 @@ object EtlRunLog {
     private def appendStatus(id: Long, status: String, stagingSuccess: Boolean,
                              watermark: Option[String], mergeSuccess: Boolean,
                              notes: Option[String], now: LocalDateTime): Unit = writeLock.synchronized {
-      val prior = all().filter($"id" === id).orderBy($"ingestedAt".desc)
-        .as[Run].collect().headOption
+      refresh()
+      val prior = rows.filter(_.id == id).maxByOption(_.ingestedAt)
       val (store, entity) = prior.map(r => (r.storeName, r.entityName)).getOrElse(("", ""))
       val wm = watermark.orElse(prior.flatMap(_.sourceUpdatedAt))
       append(Run(id, store, entity, status, now.format(ISO),
@@ -77,16 +133,15 @@ object EtlRunLog {
       * `today − (2 + days_since_success)` — i.e. two days BEFORE the
       * last success (the reference's get_start_date computes
       * now − (2 + days_gap)); 3-day default lookback when no history.
-      * `daysSince` is clamped at 0 against clock skew. Rerun-safety
-      * comes from upsert idempotence, not from exactness here. */
+      * The last success is the watermarked SUCCESS row with the highest
+      * `id`, then the latest `ingestedAt`. `daysSince` is clamped at 0
+      * against clock skew. Rerun-safety comes from upsert idempotence,
+      * not from exactness here. */
     def resolveStartDate(store: String, entity: String, today: LocalDate): LocalDate = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy($"storeName", $"entityName").orderBy($"id".desc, $"ingestedAt".desc)
-      val last = all()
-        .filter($"storeName" === store && $"entityName" === entity &&
-          $"status" === "SUCCESS" && $"sourceUpdatedAt".isNotNull)
-        .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-        .select($"sourceUpdatedAt").as[String].collect().headOption
+      val last = runs()
+        .filter(r => r.storeName == store && r.entityName == entity &&
+          r.status == "SUCCESS" && r.sourceUpdatedAt.isDefined)
+        .maxByOption(r => (r.id, r.ingestedAt)).flatMap(_.sourceUpdatedAt)
       last match {
         case Some(ts) =>
           val lastDate = LocalDate.parse(ts.take(10))

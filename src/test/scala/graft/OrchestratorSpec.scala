@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.col
+import graft.operators.PartitionedMerge
 import graft.sources.AtomicTableWriter
 
 /** End-to-end golden test: bronze fixture JSON → full daily run → gold
@@ -94,16 +97,8 @@ class OrchestratorSpec extends SparkSpec {
     assert(AtomicTableWriter.read(spark, path + "-missing").isEmpty)
   }
 
-  test("bucketed fact merges rewrite only the touched hash buckets") {
-    val root = Files.createTempDirectory("graft-bucketed").toString
-    setupBronze(root)
-    val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
-      s"$root/gold", s"$root/state", factBuckets = Some(4))
-    assert(orch.runDaily())
-    val orders = spark.read.parquet(s"$root/gold/fact_orders")
-    assert(orders.count() == 3)
-    assert(orders.columns.contains("bucket")) // partition column surfaces
-    // incremental day 2: only order W-7771 updated → only its bucket moves
+  /** Day 2's wholesale bronze: order W-7771 updated to a total of 400. */
+  private def stageDay2Orders(root: String, orch: Orchestrator): Unit = {
     val day2 = Fixtures.orderNodes.replace("5551234", "7771")
       .replace(""""updatedAt": "2025-12-07T11:00:00Z"""",
         """"updatedAt": "2025-12-09T08:00:00Z"""")
@@ -114,6 +109,19 @@ class OrchestratorSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$root/bronze/wholesale/orders/day2.json"),
       Fixtures.envelope(Seq(day2), "wholesale", "orders"))
     orch.stageEntity("wholesale", "W-", "orders")
+  }
+
+  test("bucketed fact merges rewrite only the touched hash buckets") {
+    val root = Files.createTempDirectory("graft-bucketed").toString
+    setupBronze(root)
+    val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
+      s"$root/gold", s"$root/state", factBuckets = Some(4))
+    assert(orch.runDaily())
+    val orders = spark.read.parquet(s"$root/gold/fact_orders")
+    assert(orders.count() == 3)
+    assert(orders.columns.contains("bucket")) // partition column surfaces
+    // incremental day 2: only order W-7771 updated → only its bucket moves
+    stageDay2Orders(root, orch)
     orch.mergeOrders("2025-12-09T09:00:00")
     val after = spark.read.parquet(s"$root/gold/fact_orders")
     assert(after.count() == 3) // upsert, not append
@@ -121,6 +129,42 @@ class OrchestratorSpec extends SparkSpec {
       .select("total_price").as[Double].head() == 400.0)
     assert(after.filter($"order_id" === "R-5551234")
       .select("total_price").as[Double].head() == 112.5) // untouched
+  }
+
+  test("side-by-side merges: a failed branch surfaces after its sibling commits, a rerun converges") {
+    def dayTwo(name: String): (String, Orchestrator) = {
+      val root = Files.createTempDirectory(name).toString
+      setupBronze(root)
+      val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
+        s"$root/gold", s"$root/state", factBuckets = Some(4))
+      assert(orch.runDaily())
+      stageDay2Orders(root, orch)
+      (root, orch)
+    }
+    val ingestedAt = "2025-12-09T09:00:00"
+    val (_, clean) = dayTwo("graft-merge-clean")
+    clean.mergeOrders(ingestedAt)
+
+    val (root, faulty) = dayTwo("graft-merge-fault")
+    // W2's pinned bucket count disagrees → its branch fails fast
+    val items = s"$root/gold/fact_order_items"
+    PartitionedMerge.pinBucketCount(spark, items, 8)
+    val e = intercept[IllegalStateException](faulty.mergeOrders(ingestedAt))
+    assert(e.getMessage.contains("bucket-count mismatch"))
+    // the W1 branch had committed before the failure surfaced
+    val w7771 = faulty.goldTable("fact_orders").get.filter($"order_id" === "W-7771")
+    assert(w7771.select("total_price").as[Double].collect().toSeq == Seq(400.0))
+    assert(w7771.select("ingested_at").as[String].head() == ingestedAt)
+    assert(!Files.list(java.nio.file.Paths.get(root, "gold/fact_orders")).iterator()
+      .asScala.exists(_.getFileName.toString.startsWith(".spark-staging")))
+
+    PartitionedMerge.pinBucketCount(spark, items, 4)
+    faulty.mergeOrders(ingestedAt)
+    for ((table, keys) <- Seq("fact_orders" -> Seq("order_id"),
+        "fact_order_items" -> Seq("order_id", "line_item_id"))) {
+      def rows(o: Orchestrator) = o.goldTable(table).get.orderBy(keys.map(col): _*).collect().toSeq
+      assert(rows(faulty) == rows(clean), table)
+    }
   }
 
   test("legacy non-bucketed gold tables keep the whole-table merge path") {
