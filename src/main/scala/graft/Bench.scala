@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   * Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) in
   * round-robin passes and reports the PER-QUERY MEDIAN — single-shot
   * times on a shared machine carry ±2× noise, medians don't. `value`
-  * (and its alias `median`) is the sum of per-query medians. */
+  * (and its alias `median`) is the sum of per-query medians. A failed
+  * query still reads −1; its first failure, and any graph or assign
+  * prep crash, lands in the line's `errors` block as
+  * `{"<name>": "<Class>: <first line of message>"}`. */
 object Bench {
   /** Parse the `queries` map out of a previously committed bench JSON
     * line. No JSON dependency — the artifact is generated by this very
@@ -104,19 +107,23 @@ object Bench {
       .foreach(_(spark, sfDir).count())
     catch { case _: Throwable => () }
 
-    // pre-warm the shared community-tier graph prep (Materialize.shared
-    // per (JVM, dir)) and report its build cost as its own field:
-    // q128 is alphabetically first in the tier and was silently paying
-    // the whole sort+zipWithIndex+encode build (r13 verdict #4). The
-    // persistent BM25/IVF indexes already amortize this way on disk;
-    // the graph prep is in-JVM, so Bench owns the warm explicitly.
+    // pre-warm the shared community-tier graph prep
+    // (Materialize.sharedDurable) and report its build cost as its own
+    // field: q128 is alphabetically first in the tier and was silently
+    // paying the whole sort+zipWithIndex+encode build (r13 verdict #4),
+    // so Bench owns the warm explicitly.
     val g0 = System.nanoTime()
     val coldCount0 = graft.operators.Materialize.coldBuildCount
     val coldSecs0 = graft.operators.Materialize.coldBuildSecs
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def failed(name: String, e: Throwable): Double = {
+      errors.getOrElseUpdate(name, Verify.failureReason(e))
+      -1.0
+    }
     val graphPrepSec = try {
       graft.queries.WarehouseQueries.spGraph(spark, sfDir)
       (System.nanoTime() - g0) / 1e9
-    } catch { case _: Throwable => -1.0 }
+    } catch { case e: Throwable => failed("graph_prep", e) }
     // the warm above only ever shows the warm READ cost; when the
     // durable cache misses, the true build wall-time must land in the
     // artifact too (r17 verdict #4). −3 = served warm from a prior
@@ -153,7 +160,7 @@ object Bench {
           graft.queries.WarehouseQueries.spLouvainL1(spark, sfDir).count()
           graft.queries.WarehouseQueries.spLpa3(spark, sfDir).count()
           (System.nanoTime() - ga0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case e: Throwable => failed("assign_prep", e) }
       }
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
@@ -163,7 +170,8 @@ object Bench {
         // stage to its query; thread-local, cleared after the action
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true }
+                 catch { case e: Throwable => failed(name, e); false }
         spark.sparkContext.setJobDescription(null)
         val dt = (System.nanoTime() - t0) / 1e9
         // measurement hygiene: queries must not be timed against earlier
@@ -225,7 +233,7 @@ object Bench {
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+                 catch { case e: Throwable => failed(name, e); false }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
@@ -248,7 +256,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
     val line =
-      f"""{"metric":"total","value":$total%.3f,"median":$total%.3f,"runs":$runs,"load_avg":$load%.2f,"load_avg_start":$loadStart%.2f,"contended":$contended,"anchor_sec":$anchorSec%.3f,"anchor_mt_sec":$anchorMtSec%.3f,"graph_prep_sec":$graphPrepSec%.3f,"graph_prep_cold_sec":$graphPrepColdSec%.3f,"assign_prep_sec":$assignPrepSec%.3f,"cpus":"$cpus","unit":"sec","queries":$qs,"probes":$probeJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"median":$total%.3f,"runs":$runs,"load_avg":$load%.2f,"load_avg_start":$loadStart%.2f,"contended":$contended,"anchor_sec":$anchorSec%.3f,"anchor_mt_sec":$anchorMtSec%.3f,"graph_prep_sec":$graphPrepSec%.3f,"graph_prep_cold_sec":$graphPrepColdSec%.3f,"assign_prep_sec":$assignPrepSec%.3f,"cpus":"$cpus","unit":"sec","queries":$qs,"probes":$probeJson,"errors":${Verify.jsonObject(errors)},"sf":"$sfDir"}"""
     println(line)
     // durability: harness tails can truncate the printed line, losing
     // the early-alphabet per-query times — also land the complete JSON

@@ -2,8 +2,34 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare (scripts/check.py), and
+  * failures.json ({query: reason}, `{}` when every query ran). */
 object Verify {
+  /** JSON string literal. Escapes backslash, quote and ALL control
+    * chars (<0x20): a tab or CR in hand-written oracle SQL or in an
+    * exception message would otherwise make the reader's json.load
+    * fail and silently zero the artifact. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Flat JSON object of string values, in the given order. */
+  private[graft] def jsonObject(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+
+  /** The reason a failure artifact records: `<Class>: <first line of
+    * message>`. */
+  private[graft] def failureReason(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .fold(e.getClass.getName)(m => s"${e.getClass.getName}: $m")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -25,6 +51,7 @@ object Verify {
         ps.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
@@ -34,28 +61,16 @@ object Verify {
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = failureReason(e)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    Files.writeString(Paths.get(s"$outDir/failures.json"), jsonObject(failures))
     val oracleOut = only match {
       case Some(ps) => SparkEntry.oracleSql.filter { case (n, _) =>
         ps.exists(n.startsWith) }
       case None => SparkEntry.oracleSql
     }
-    val json = oracleOut
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(oracleOut))
     spark.stop()
   }
 }

@@ -26,10 +26,6 @@ object VectorFunctions {
     when(n === 0.0, lit(0.0)).otherwise(dot(a, b) / n)
   }
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(d(a), d(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
-
   /** Unit-normalize (zero vector passes through unchanged). */
   def normalize(a: Column): Column = {
     val n = norm(a)

@@ -2,39 +2,11 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Typed views of the seven warehouse tables (SURVEY §1.3: `Dataset[T]`
+/** Typed views of the two order fact tables (SURVEY §1.3: `Dataset[T]`
   * where a stable schema aids compile-time checks; the dynamic
   * DataFrame API remains the primary surface). Field order matches
   * SCHEMA_MAP; Spark derives `Encoder`s from the case classes. */
 object Warehouse {
-
-  case class DimCustomer(
-    customer_id: String, first_name: String, last_name: String, email: String,
-    phone: String, created_at: String, updated_at: String, state: String,
-    tax_exempt: String, tags: String, note: String, number_of_orders: Int,
-    lifetime_duration: String, amount_spent: Double, currency: String,
-    address1: String, address2: String, city: String, province: String,
-    country: String, zip: String, company: String, last_order_id: String,
-    last_order_date: String, predicted_spend_tier: String, rfm_group: String)
-
-  case class DimProduct(
-    product_id: String, title: String, handle: String, product_type: String,
-    vendor: String, status: String, created_at: String, updated_at: String,
-    tags: String, tracks_inventory: String)
-
-  case class DimProductVariant(
-    product_id: String, variant_id: String, sku: String, price: Double,
-    compare_at_price: Double, available_for_sale: String,
-    created_at: String, updated_at: String)
-
-  case class FactCurrentInventory(
-    product_id: String, variant_id: String, available: Int, on_hand: Int,
-    committed: Int, incoming: Int, reserved: Int, inventory_id: String)
-
-  case class InventorySnapshot(
-    product_id: String, product_title: String, variant_id: String,
-    sku: String, available: Int, on_hand: Int, committed: Int,
-    incoming: Int, reserved: Int, snapshot_ts: String, snapshot_date: String)
 
   case class FactOrder(
     order_id: String, order_number: String, created_at: String,
@@ -59,11 +31,5 @@ object Warehouse {
       { import s.implicits._; df.as[FactOrder] }
     def asOrderItems(implicit s: SparkSession): Dataset[FactOrderItem] =
       { import s.implicits._; df.as[FactOrderItem] }
-    def asCustomers(implicit s: SparkSession): Dataset[DimCustomer] =
-      { import s.implicits._; df.as[DimCustomer] }
-    def asProducts(implicit s: SparkSession): Dataset[DimProduct] =
-      { import s.implicits._; df.as[DimProduct] }
-    def asVariants(implicit s: SparkSession): Dataset[DimProductVariant] =
-      { import s.implicits._; df.as[DimProductVariant] }
   }
 }

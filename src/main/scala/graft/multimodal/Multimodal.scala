@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -221,11 +221,4 @@ object Multimodal {
     salted.repartition(partitions, col("__bucket"))
       .drop("__bytes", "__bucket")
   }
-
-  /** Column-level stub decode for SQL pipelines (no typed API needed):
-    * deterministic fake dimensions from the content hash. */
-  def stubWidth(content: Column): Column =
-    pmod(conv(substring(md5(content), 1, 8), 16, 10).cast("long"), lit(1280L))
-  def stubHeight(content: Column): Column =
-    pmod(conv(substring(md5(content), 9, 8), 16, 10).cast("long"), lit(720L))
 }

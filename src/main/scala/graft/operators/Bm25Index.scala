@@ -74,29 +74,6 @@ object Bm25Index {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
 
-  /** Consolidate a streaming-maintained index. Each micro-batch fold
-    * ([[graft.streaming.IncrementalStream.applyBm25IndexBatch]]) lands
-    * one `postings/__batch=<id>/bucket=N/` partition tree, so file
-    * count — and with it probe cost: footer reads, task scheduling,
-    * open/seek — grows per batch FOREVER. This maintenance pass
-    * rewrites every batch layer into ONE `__batch=<last>` layer, one
-    * file per touched bucket, via the [[graft.sources
-    * .AtomicTableWriter]] crash-safe swap (readers never see a
-    * half-compacted index; a crash leaves old or new, never a mix).
-    *
-    * Search results are BYTE-identical by construction: doc ids are
-    * append-only across batches (the sink contract), so the posting
-    * row multiset is unchanged — only its file layout moves; bucket
-    * pruning sees the same `bucket=` dirs and the stats sidecar
-    * (totals + `__batch_id` replay guard) is untouched.
-    *
-    * @return number of batch layers folded, or None when the index is
-    *         absent, batch-built (no `__batch` level), or already a
-    *         single layer (no-op — pointless rewrites churn I/O) */
-  def compact(spark: SparkSession, indexPath: String): Option[Long] =
-    graft.sources.IndexMaintenance
-      .compactBatchLayers(spark, s"$indexPath/postings")
-
   /** Search the index; same contract and numbers as [[Bm25.topK]].
     * The bucket count comes from the stats sidecar written at build
     * time — never from the caller — so the probe's driver-side bucket
@@ -106,8 +83,6 @@ object Bm25Index {
              queries: Seq[(Int, String)], k: Int = 10,
              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val qTerms = Bm25.queryTerms(spark, queries)
-    // the streaming-maintained index carries an extra __batch_id
-    // guard column here — select the stat columns explicitly
     val statsAll = spark.read.parquet(s"$indexPath/stats")
     require(statsAll.columns.contains("n_buckets"),
       s"Bm25Index: $indexPath/stats has no n_buckets column — index " +

@@ -18,15 +18,13 @@ import org.apache.spark.sql.functions._
   *    the index, because folding a delta chunked with different
   *    parameters would store incomparable boundaries and silently
   *    destroy dedup hits (a probe would miss chunks that ARE there) —
-  *    the same frozen-meta discipline as the vector index
-  *    (VectorIndexOps) and the BM25 bucket modulus.
+  *    the same frozen-meta discipline as the IVF quantizer meta
+  *    and the BM25 bucket modulus.
   *
   * Probes resolve their hashes' buckets ON THE DRIVER (same md5
   * derivation as the column hash) and push them as a partition
   * filter — probe cost scales with the delta's chunk count, not the
-  * corpus. Streaming maintenance (micro-batch appends + layer
-  * compaction) lives in
-  * [[graft.streaming.IncrementalStream.applyCdcIndexBatch]].
+  * corpus.
   */
 object CdcIndex {
 
@@ -81,10 +79,4 @@ object CdcIndex {
       .filter(col("chunk_md5").isin(chunkHashes: _*))
       .select("doc_id", "chunk_idx", "start", "chunk_len", "chunk_md5")
   }
-
-  /** Fold streaming batch layers into one (see
-    * [[graft.sources.IndexMaintenance.compactBatchLayers]]). */
-  def compact(spark: SparkSession, indexPath: String): Option[Long] =
-    graft.sources.IndexMaintenance
-      .compactBatchLayers(spark, s"$indexPath/postings")
 }

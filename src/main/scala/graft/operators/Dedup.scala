@@ -479,8 +479,7 @@ object Dedup {
 
   /** Embedding near-dup pairs: SRP-LSH buckets then in-bucket cosine
     * verify. `planes` trades recall for bucket size (16 planes ≈ 65k
-    * buckets). For guaranteed-exact small corpora use
-    * `Similarity.bruteForcePairs`. */
+    * buckets). */
   def embeddingDuplicates(df: DataFrame, idCol: String, vecCol: String,
                           threshold: Double, planes: Int = 12): DataFrame = {
     val b = fanOut(df).select(col(idCol).as("id"), col(vecCol).as("v"),

@@ -191,12 +191,8 @@ object LabelOps {
       .agg(count(lit(1)).as("__n")))
 
   /** [[krippendorffAlpha]] from the PRE-COUNTED sufficient statistic —
-    * one row per (unit, label) with its rating count. The statistic is
-    * ADDITIVE in ratings, which is what makes the α maintainable from
-    * a persistent count state as batches stream in (see
-    * [[graft.streaming.IncrementalStream.applyKrippendorffBatch]])
-    * without ever re-scanning rating history. */
-  private[graft] def krippendorffFromCounts(cnt0: DataFrame): DataFrame = {
+    * one row per (unit, label) with its rating count. */
+  private def krippendorffFromCounts(cnt0: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val cnt = cnt0
       .select(col("__u"), col("__l"), col("__n").cast(dec).as("__n"))

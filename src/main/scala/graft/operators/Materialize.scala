@@ -44,6 +44,22 @@ private[graft] object Materialize {
 
   private val sharedPaths =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val sharedLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Build-once-per-key memo over [[sharedPaths]]. A build may itself
+    * read another shared frame (`spLpa3` builds over `spGraph`), so it
+    * must not run inside `ConcurrentHashMap.computeIfAbsent`, which
+    * throws "Recursive update" when the nested key lands in the bin of
+    * the key being built. */
+  private def memo(key: String)(build: => String): String =
+    sharedLocks.computeIfAbsent(key, _ => new AnyRef).synchronized {
+      Option(sharedPaths.get(key)).getOrElse {
+        val path = build
+        sharedPaths.put(key, path)
+        path
+      }
+    }
 
   /** Cold-build bookkeeping for [[sharedDurable]]: count and wall
     * seconds of builds actually RUN in this JVM — cache hits (in-JVM
@@ -57,32 +73,12 @@ private[graft] object Materialize {
   def coldBuildCount: Int = coldBuilds.get()
   def coldBuildSecs: Double = coldBuildNanos.get() / 1e9
 
-  /** Build-once-per-JVM shared frame (the Bm25Index/IVF persistent-
-    * index pattern, generalized): the first caller materializes
-    * `build` to parquet under the JVM temp dir; every later caller —
-    * including OTHER QUERIES in the same session — gets a plain
-    * parquet scan of that materialization. Unlike [[once]], the
-    * result survives cache hygiene (Bench unpersists every block
-    * between queries) because it lives on disk, exactly as a shared
-    * projection would be a materialized table on a real cluster.
-    *
-    * `key` must uniquely identify (logical frame, input dir); the
-    * caller owns key discipline — a stale key serves stale data.
-    * Compute inside `computeIfAbsent` so concurrent callers build
-    * exactly once. */
-  def shared(s: org.apache.spark.sql.SparkSession, key: String)
-            (build: => DataFrame): DataFrame = {
-    val path = sharedPaths.computeIfAbsent(key, { _ =>
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-shared/$tag"
-      build.write.mode("overwrite").parquet(dir)
-      dir
-    })
-    s.read.parquet(path)
-  }
-
-  /** Cross-JVM durable variant of [[shared]]: the materialization is
+  /** Build-once shared frame, durable across JVMs: the first caller
+    * materializes `build` to parquet under the JVM temp dir and every
+    * later caller — other queries in the same session included — gets
+    * a plain parquet scan of it. Unlike [[once]], the result survives
+    * cache hygiene (Bench unpersists every block between queries)
+    * because it lives on disk. The materialization is
     * keyed by (key, input FINGERPRINT) and a later JVM whose
     * fingerprint still matches reads the existing parquet instead of
     * rebuilding — the on-disk amortization the Bm25/IVF persistent
@@ -123,7 +119,7 @@ private[graft] object Materialize {
   def sharedDurable(s: org.apache.spark.sql.SparkSession, key: String,
                     fingerprint: String)(build: => DataFrame): DataFrame = {
     val fullKey = key + "\u0001" + fingerprint
-    val path = sharedPaths.computeIfAbsent(fullKey, { _ =>
+    val path = memo(fullKey) {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(fullKey.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
       val dir = new java.io.File(
@@ -158,7 +154,7 @@ private[graft] object Materialize {
           else tmp.getAbsolutePath // unpublishable: serve the private build
         }
       }
-    })
+    }
     s.read.parquet(path)
   }
 

@@ -70,7 +70,7 @@ object MergeOps {
   /** CDC-style snapshot diff: classify every key as insert / delete /
     * update / unchanged between two versions of a table — the change
     * feed a downstream incremental consumer (or an audit) wants from
-    * two [[graft.sources.VersionedTable]] snapshots.
+    * two snapshots of a table.
     *
     * Value comparison hashes each non-key column INDIVIDUALLY (md5 of
     * its string rendering, null → a reserved sentinel), then hashes

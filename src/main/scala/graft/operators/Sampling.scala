@@ -271,7 +271,7 @@ object Sampling {
     * RNG, no global sort: one key shuffle + shard-local sorts that
     * parallelize across shards). A new seed is a fresh independent
     * epoch; writers consume (shard, pos) to lay files out in training
-    * order ([[Export]] handles the bounded-shard write).
+    * order.
     *
     * @return input columns ++ (shard, pos) — pos is 1-based within shard
     */

@@ -19,11 +19,6 @@ import org.apache.spark.sql.functions._
   * Scale shape: everything is windows over one hash partition on the
   * business key — a single shuffle; per-key state is one row of lag
   * context. No self-joins, no driver-side state.
-  *
-  * EAGER: [[merge]] runs a Spark job at DataFrame-construction time in
-  * the default [[Materialize]] mode (the touched-key history
-  * checkpoints once and feeds three readers);
-  * `spark.graft.localCheckpoint=false` defers to lazy persist.
   */
 object Scd2 {
 
@@ -78,73 +73,4 @@ object Scd2 {
   def asOf(history: DataFrame, ts: org.apache.spark.sql.Column): DataFrame =
     history.filter(col("valid_from") <= ts &&
       (col("valid_to").isNull || col("valid_to") > ts))
-
-  /** Fold a batch of NEW change events into an existing SCD2 history
-    * incrementally: cost scales with the batch plus the open versions
-    * of the touched keys, never with the closed history — the 100 TB
-    * path for a history table that [[fromChangeLog]] would otherwise
-    * rebuild from the full log every run.
-    *
-    * Closed versions of touched keys and ALL versions of untouched
-    * keys pass through untouched (byte-identical); each touched key's
-    * open version is replayed as a synthetic leading event (null
-    * tie-break, so it sorts before any real same-timestamp event) and
-    * re-versioned together with the batch, then version numbers shift
-    * by the key's prior version count so numbering continues
-    * seamlessly.
-    *
-    * Idempotence: events strictly below a key's current `valid_from`
-    * horizon are DROPPED as replays (in an in-order feed they can only
-    * be already-applied), and a re-stated event at the horizon
-    * collapses into the open version — so re-running an
-    * already-applied batch is a no-op. The flip side of that contract:
-    * a genuinely late event below the horizon is also dropped; late
-    * data repair means rebuilding those keys from the full log, which
-    * is the honest answer anyway (it must rewrite closed intervals).
-    *
-    * Tie-break contract AT the horizon: the open version is replayed
-    * with a NULL tie-break so it sorts before any real event sharing
-    * its `valid_from` timestamp (history does not store the opening
-    * event's tie-break — by design, the output schema is the SCD2
-    * table, nothing more). `merge` therefore matches a full
-    * [[fromChangeLog]] rebuild only when tie-break values are globally
-    * increasing across batches (a sequential event id / log offset —
-    * what the randomized differential spec generates). A batch event
-    * that shares the open version's exact `valid_from` but carries a
-    * SMALLER tie-break than the original opening event would replay
-    * after the open version here yet before it in a full rebuild. If
-    * your tie-break can regress across batches at equal timestamps,
-    * rebuild from the full log instead.
-    */
-  def merge(history: DataFrame, log: DataFrame, keyCols: Seq[String],
-            tsCol: String, tieBreak: String, attrCols: Seq[String]): DataFrame = {
-    val outCols = (keyCols ++ attrCols ++
-      Seq("valid_from", "valid_to", "is_current", "version")).map(col)
-    val keys = log.select(keyCols.map(col): _*).distinct()
-    val untouched = history.join(keys, keyCols, "left_anti")
-    val touched = Materialize.once(history.join(keys, keyCols, "left_semi"))
-    val closed = touched.filter(!col("is_current"))
-    val open = touched.filter(col("is_current"))
-    val tbType = log.schema(tieBreak).dataType
-    val synthetic = open.select(
-      (keyCols ++ attrCols).map(col) ++ Seq(
-        col("valid_from").as(tsCol),
-        lit(null).cast(tbType).as(tieBreak)): _*)
-    // drop below-horizon events: in an in-order feed they are replays
-    val horizon = open.select(keyCols.map(col) :+ col("valid_from").as("__hz"): _*)
-    val fresh = log.join(horizon, keyCols, "left")
-      .filter(col("__hz").isNull || col(tsCol) >= col("__hz"))
-    val replayLog = synthetic.unionByName(
-      fresh.select((keyCols ++ attrCols ++ Seq(tsCol, tieBreak)).map(col): _*))
-    val offsets = open.select(
-      keyCols.map(col) :+ (col("version") - 1).as("__off"): _*)
-    val rebuilt = fromChangeLog(replayLog, keyCols, tsCol, tieBreak, attrCols)
-      .join(offsets, keyCols, "left")
-      .withColumn("version",
-        (col("version") + coalesce(col("__off"), lit(0))).cast("int"))
-      .drop("__off")
-    untouched.select(outCols: _*)
-      .unionByName(closed.select(outCols: _*))
-      .unionByName(rebuilt.select(outCols: _*))
-  }
 }

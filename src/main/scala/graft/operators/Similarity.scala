@@ -573,16 +573,6 @@ object Similarity {
     mutualPairs(knn)
   }
 
-  /** Exact all-pairs above a cosine threshold (small corpora / testing). */
-  def bruteForcePairs(df: DataFrame, idCol: String, vecCol: String,
-                      threshold: Double): DataFrame = {
-    val v = fanOut(df).select(col(idCol).as("id"), col(vecCol).as("v"))
-    v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
-      .withColumn("cosine", cosine(col("a.v"), col("b.v")))
-      .filter(col("cosine") >= threshold)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("cosine"))
-  }
-
   /** Fit the k-means coarse quantizer and return the centroids, indexed
     * by cell id. Training is capped at `maxTrainRows` via a seeded
     * sample — a coarse quantizer needs a representative sample, not the
@@ -662,8 +652,7 @@ object Similarity {
     * probe that fans into it. The mitigation at scale is quantizer
     * capacity, not salting: grow `nCells` with the corpus (FAISS
     * practice: ~√n to 16·√n) and re-split any cell past a size bound
-    * by k-means on its members (the IMI/two-level path), which
-    * [[VectorIndexOps.compact]]'s rewrite discipline accommodates.
+    * by k-means on its members (the IMI/two-level path).
     *
     * EAGER: runs Spark jobs at call time (the k-means training sample,
     * then the partitioned write — index construction IS the work). */
@@ -785,10 +774,8 @@ object Similarity {
   }
 
   /** `preFitted`: inject an already-fitted quantizer (from
-    * [[fitQuantizedCentroids]]) instead of training here — the
-    * freeze-the-quantizer discipline incremental maintenance needs
-    * (see [[VectorIndexOps]]): appends assign against the BUILD-time
-    * centroids, so a comparison build must share them exactly. */
+    * [[fitQuantizedCentroids]] or [[fitBalancedQuantizedCentroids]])
+    * instead of training here. */
   def buildIvfIndexQuantized(corpus: DataFrame, idCol: String, vecCol: String,
                              path: String, nCells: Int = 16, seed: Long = 42L,
                              maxTrainRows: Long = 100000L,

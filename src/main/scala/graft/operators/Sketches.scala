@@ -183,11 +183,9 @@ object Sketches {
   }
 
   /** The per-(day, bucket) register state behind [[slidingDistinct]]:
-    * mergeable by MAX on (day, bucket) — a streaming sink can fold
-    * micro-batches into it and [[slidingFromRegisters]] answers from
-    * the folded state (see graft.streaming.IncrementalStream). */
-  def dailyRegisters(df: DataFrame, dayCol: String, keyCol: String,
-                     b: Int): DataFrame =
+    * mergeable by MAX on (day, bucket). */
+  private def dailyRegisters(df: DataFrame, dayCol: String,
+                             keyCol: String, b: Int): DataFrame =
     df.select(col(dayCol).cast("long").as("day"),
         hllBucket(col(keyCol), b).as("bucket"),
         hllRegister(col(keyCol), b).as("r"))
@@ -199,8 +197,8 @@ object Sketches {
     * days outside the spine still feed the windows of spine days in
     * range (the roll runs over the union of days, then projects onto
     * the spine). */
-  def slidingFromRegisters(daily: DataFrame, days: DataFrame,
-                           b: Int, windowDays: Int): DataFrame = {
+  private def slidingFromRegisters(daily: DataFrame, days: DataFrame,
+                                   b: Int, windowDays: Int): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1: $windowDays")
     val m = 1 << b
     val spine = days.select(col("day")).union(daily.select(col("day")))

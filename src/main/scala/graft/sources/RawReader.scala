@@ -70,10 +70,4 @@ object RawReader {
   def readJsonl(spark: SparkSession, node: StructType, path: String): DataFrame =
     spark.read.schema(node).json(path)
       .withColumn("_source_file", input_file_name())
-
-  /** S6 — raw JSON file sink: persist a bronze batch with the extractor's
-    * metadata envelope as sidecar columns, line-delimited for
-    * splittability. */
-  def writeBronze(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
 }

@@ -94,10 +94,6 @@ final class ShopifyClient(
       if (since.isEmpty && until.isEmpty) Map.empty
       else Map("query" -> searchFilter(since, until)))
 
-  /** S4 — full-refresh scan (products always; customers in one variant). */
-  def extractFull(query: String, resourceName: String): Seq[String] =
-    fetchAllPages(query, resourceName)
-
   /** S6 — raw-file envelope sink, the exact shape RawReader's variant 1
     * reads: `{metadata:{...}, data:[edges]}` (extract_table.py:217-244). */
   def saveToFile(edges: Seq[String], storeType: String, entityType: String,

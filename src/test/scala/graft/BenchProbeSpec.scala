@@ -43,4 +43,23 @@ class BenchProbeSpec extends AnyFunSuite {
     assert(flagged.size == 16)
     assert(flagged.head._1 == "q30") // worst mover leads
   }
+
+  test("errors block: escaped reasons parse as JSON; queries block unchanged") {
+    val msg = "bad \"col\"\tat \"queries\":{\"q9\":9.0}\nsecond line"
+    val reason = Verify.failureReason(new IllegalStateException(msg))
+    assert(reason ==
+      "java.lang.IllegalStateException: bad \"col\"\tat \"queries\":{\"q9\":9.0}")
+    val line = sample.replace(""","sf":""",
+      ""","errors":""" + Verify.jsonObject(Seq("q3_topk" -> reason)) + ""","sf":""")
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(tree.get("errors").get("q3_topk").asText == reason)
+    assert(tree.get("queries").size == 3)
+    assert(Bench.parsePriorQueries(line) ==
+      Map("q1_agg" -> 0.252, "q2_rollup" -> 1.030, "q3_topk" -> -1.0))
+    // the escaper itself round-trips every control char
+    val raw = "a\nb\r\"c\"\\d\te\u0001"
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Verify.jsonString(raw)).asText == raw)
+    assert(Verify.jsonObject(Nil) == "{}")
+  }
 }

@@ -15,6 +15,10 @@ import scala.jdk.CollectionConverters._
   * empty string and the output is simply the file's LINE count (131
   * for TarShards.scala, misread across several reviews as "131 NUL
   * bytes"). Use `tr -cd '\0' < file | wc -c` or this spec instead.
+  *
+  * Reachability gate: every file under src/main/scala is reachable by
+  * name from an entry point, so library code that nothing runs cannot
+  * accumulate unseen.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -34,5 +38,57 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "binary-to-git source files (diffs unreviewable):\n" +
         offenders.mkString("\n"))
+  }
+
+  /** Literals are matched before comments and kept, so "//" inside a
+    * string is not a comment and a class named only in a string (a
+    * config key, a reflection target) still counts as a mention. */
+  private val LiteralOrComment = ("\"\"\"[\\s\\S]*?\"\"\"\"*" +
+    "|\"[^\"\\\\\n]*(?:\\\\.[^\"\\\\\n]*)*\"" +
+    "|'(?:\\\\u[0-9a-fA-F]{4}|\\\\.|[^'\\\\\n])'" +
+    "|//[^\n]*|/\\*[\\s\\S]*?\\*/").r
+  private def stripComments(s: String): String =
+    LiteralOrComment.replaceAllIn(s, m =>
+      if (m.matched.startsWith("/")) " "
+      else scala.util.matching.Regex.quoteReplacement(m.matched))
+
+  private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
+  private val Definition =
+    "\\b(?:class|object|trait)\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+
+  test("every src/main/scala file is reachable from an entry point") {
+    val main = Paths.get("src/main/scala")
+    val harness = Paths.get("perfbench/harness")
+    assert(Files.isDirectory(main) && Files.isDirectory(harness),
+      "run from repo root")
+    // files no entry point reaches that stay on purpose
+    val allowed = Map(
+      "graft/sources/ShopifyConfig.scala" -> "deployment credentials",
+      "graft/model/Warehouse.scala" -> "typed views WarehouseSpec checks Flatten through",
+      "org/apache/spark/sql/graft/CacheIntrospect.scala" -> "cache probe DedupSpec uses")
+    def read(p: Path) = stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+    val text = scalaFiles(main).map(p => main.relativize(p).toString -> read(p)).toMap
+    val definedIn: Map[String, Set[String]] = text.toSeq
+      .flatMap { case (f, t) => Definition.findAllMatchIn(t).map(_.group(1) -> f) }
+      .groupMap(_._1)(_._2).map { case (k, v) => k -> v.toSet }
+    def targets(t: String): Set[String] =
+      Ident.findAllIn(t).toSet[String].flatMap(definedIn.getOrElse(_, Set.empty))
+    val edges = text.map { case (f, t) => f -> (targets(t) - f) }
+    val roots = Seq("SparkEntry", "Orchestrator", "Bench", "Verify")
+      .flatMap(definedIn.getOrElse(_, Set.empty)).toSet ++
+      scalaFiles(harness).flatMap(p => targets(read(p)))
+    var reached = Set.empty[String]
+    var frontier = roots
+    while (frontier.nonEmpty) {
+      reached ++= frontier
+      frontier = frontier.flatMap(edges) -- reached
+    }
+    val unreached = text.keySet -- reached
+    assert((unreached -- allowed.keySet).isEmpty,
+      "src/main/scala files no entry point reaches (delete them, or " +
+        "reach them):\n" + (unreached -- allowed.keySet).toSeq.sorted.mkString("\n"))
+    assert(allowed.keySet.subsetOf(unreached),
+      "allow-listed files that are now reached or gone (drop them from " +
+        "the list): " + (allowed.keySet -- unreached).mkString(", "))
   }
 }

@@ -91,59 +91,4 @@ class Bm25Spec extends SparkSpec {
     assert(out.forall(_.getInt(0) == 1))
     assert(out.nonEmpty)
   }
-
-  test("Bm25Index.compact: bounded files, byte-identical search, guard intact") {
-    import graft.streaming.IncrementalStream
-    val dir = java.nio.file.Files.createTempDirectory("bm25cmp").toString
-    val batches = Seq(
-      Seq((1L, "spark hash join join"), (2L, "spark table scan")),
-      Seq((3L, "window sort table sort merge")),
-      Seq((4L, "hash hash hash")),
-      Seq((5L, "spark join window probe")))
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      IncrementalStream.applyBm25IndexBatch(
-        rows.toDF("id", "text"), i.toLong, dir, "id", "text", nBuckets = 8)
-    }
-    val qs = Seq(1 -> "hash join", 2 -> "table spark", 3 -> "window probe")
-    val before = Bm25Index.search(spark, dir, qs, k = 5)
-      .collect().map(_.toString).sorted.toSeq
-    def partFiles: Seq[String] = {
-      val base = java.nio.file.Paths.get(dir, "postings")
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      java.nio.file.Files.walk(base).forEach { q =>
-        val n = q.getFileName.toString
-        if (n.startsWith("part-") && n.endsWith(".parquet")) out += q.toString
-      }
-      out.toSeq
-    }
-    val filesBefore = partFiles.size
-    val folded = Bm25Index.compact(spark, dir)
-    assert(folded.contains(4L))
-    // exactly one file per touched bucket, single __batch layer
-    val files = partFiles
-    assert(files.size < filesBefore, s"compaction did not shrink: $filesBefore -> ${files.size}")
-    assert(files.forall(_.contains("__batch=3/")), "must collapse to the newest batch layer")
-    assert(files.size == files.map(_.replaceAll(".*bucket=", "").replaceAll("/.*", "")).distinct.size,
-      "one file per bucket")
-    // search results byte-identical through the rewrite
-    val after = Bm25Index.search(spark, dir, qs, k = 5)
-      .collect().map(_.toString).sorted.toSeq
-    assert(after == before)
-    // replay guard survives: re-applying an old batch is a no-op
-    IncrementalStream.applyBm25IndexBatch(
-      batches(1).toDF("id", "text"), 1L, dir, "id", "text", nBuckets = 8)
-    assert(Bm25Index.search(spark, dir, qs, k = 5)
-      .collect().map(_.toString).sorted.toSeq == before)
-    // and a genuinely new batch still folds in afterwards
-    IncrementalStream.applyBm25IndexBatch(
-      Seq((6L, "hash probe")).toDF("id", "text"), 4L, dir, "id", "text", nBuckets = 8)
-    val allDocs = (batches.flatten :+ (6L, "hash probe")).toDF("id", "text")
-    val scan = Bm25.topK(allDocs, "id", "text", qs, k = 5)
-      .collect().map(_.toString).sorted.toSeq
-    assert(Bm25Index.search(spark, dir, qs, k = 5)
-      .collect().map(_.toString).sorted.toSeq == scan)
-    // compacting a single-layer or batch-built index is a no-op
-    assert(Bm25Index.compact(spark, dir).contains(2L))
-    assert(Bm25Index.compact(spark, dir).isEmpty)
-  }
 }

@@ -25,6 +25,17 @@ class MaterializeDurableSpec extends SparkSpec {
     assert(builds == 1 && b.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("a build may read another shared frame whose key shares its memo bin") {
+    // spLpa3 builds over spGraph: a nested key in the building key's
+    // ConcurrentHashMap bin failed with "Recursive update" (q180 at sf0.001)
+    def bin(k: String) = { val h = (k + "\u0001" + "fp").hashCode; (h ^ (h >>> 16)) & 0xfff }
+    val outer = s"$key-outer"
+    val inner = Iterator.from(0).map(i => s"$key-inner-$i").find(bin(_) == bin(outer)).get
+    val df = Materialize.sharedDurable(spark, outer, "fp")(
+      Materialize.sharedDurable(spark, inner, "fp")(build()))
+    assert(df.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("a changed fingerprint re-keys: stale data is never served") {
     Materialize.sharedDurable(spark, key, "fp1")(build())
     val before = builds

@@ -61,74 +61,4 @@ class Scd2Spec extends SparkSpec {
     assert(k2.length == 1 && k2(0).getAs[Int]("version") == 1 &&
       k2(0).getAs[Boolean]("is_current"))
   }
-
-  // ------------------------------------------------------------- merge
-  private def asSet(df: org.apache.spark.sql.DataFrame) =
-    df.select("k", "attr", "valid_from", "valid_to", "is_current", "version")
-      .collect().map(_.toSeq).toSet
-
-  test("merge(batch) == fromChangeLog(full log): change, re-statement, new key") {
-    val batch = Seq(
-      (1L, ts("2024-01-05 00:00:00"), 40L, "C"), // key 1: real change
-      (2L, ts("2024-01-02 00:00:00"), 41L, "X"), // key 2: re-statement (no-op)
-      (9L, ts("2024-01-01 00:00:00"), 42L, "Z")  // brand-new key
-    ).toDF("k", "ts", "eid", "attr")
-    val incremental = Scd2.merge(hist, batch, Seq("k"), "ts", "eid", Seq("attr"))
-    val full = Scd2.fromChangeLog(log.unionByName(batch),
-      Seq("k"), "ts", "eid", Seq("attr"))
-    assert(asSet(incremental) == asSet(full))
-  }
-
-  test("merge replay is a no-op (idempotent)") {
-    val batch = Seq(
-      (1L, ts("2024-01-05 00:00:00"), 40L, "C"),
-      (9L, ts("2024-01-01 00:00:00"), 42L, "Z")
-    ).toDF("k", "ts", "eid", "attr")
-    val once = Scd2.merge(hist, batch, Seq("k"), "ts", "eid", Seq("attr"))
-    val twice = Scd2.merge(once, batch, Seq("k"), "ts", "eid", Seq("attr"))
-    assert(asSet(twice) == asSet(once))
-  }
-
-  test("randomized differential: incremental merge == full rebuild at any split") {
-    val rnd = new scala.util.Random(17)
-    for (round <- 1 to 5) {
-      // random in-order change log: few keys/attrs so re-statements and
-      // same-ts ties happen; eid is globally unique and increasing
-      val events = (1 to 120).map { i =>
-        (rnd.nextInt(6).toLong,                                   // key
-          ts(f"2024-01-${1 + i / 8}%02d 00:00:00"),               // ts grows
-          i.toLong,                                               // eid
-          ("P" + rnd.nextInt(3)): String)                         // attr
-      }
-      val cut = 30 + rnd.nextInt(60)
-      val (past, future) = events.splitAt(cut)
-      val incremental = Scd2.merge(
-        Scd2.fromChangeLog(past.toDF("k", "ts", "eid", "attr"),
-          Seq("k"), "ts", "eid", Seq("attr")),
-        future.toDF("k", "ts", "eid", "attr"),
-        Seq("k"), "ts", "eid", Seq("attr"))
-      val full = Scd2.fromChangeLog(events.toDF("k", "ts", "eid", "attr"),
-        Seq("k"), "ts", "eid", Seq("attr"))
-      assert(asSet(incremental) == asSet(full),
-        s"round $round diverged at cut=$cut")
-    }
-  }
-
-  test("merge leaves untouched keys and closed versions byte-identical") {
-    val batch = Seq((1L, ts("2024-01-05 00:00:00"), 40L, "C"))
-      .toDF("k", "ts", "eid", "attr")
-    val merged = Scd2.merge(hist, batch, Seq("k"), "ts", "eid", Seq("attr"))
-    // untouched keys 2 and 3: identical row sets
-    assert(asSet(merged.filter($"k".isin(2L, 3L))) ==
-      asSet(hist.filter($"k".isin(2L, 3L))))
-    // key 1 closed versions 1..2 unchanged; old open v3 closed at the
-    // batch event; new v4 current
-    val k1 = merged.filter($"k" === 1).orderBy("version").collect()
-    assert(k1.map(_.getAs[Int]("version")).toSeq == Seq(1, 2, 3, 4))
-    assert(k1.map(_.getAs[String]("attr")).toSeq == Seq("A", "B", "A", "C"))
-    assert(Option(k1(2).getAs[Timestamp]("valid_to"))
-      .contains(ts("2024-01-05 00:00:00")))
-    assert(k1.map(_.getAs[Boolean]("is_current")).toSeq ==
-      Seq(false, false, false, true))
-  }
 }
