@@ -4,7 +4,6 @@ import java.time.{LocalDate, LocalDateTime}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
@@ -74,28 +73,30 @@ object Orchestrator {
   * one entity the gold tables that read only silver merge side by side
   * (W1 beside W2; W4, W5 and the W6 → W7 chain).
   *
+  * Each gold table has one write path. Tables that are replaced whole
+  * (the silver batches and W3–W5) swap atomically through
+  * [[graft.sources.AtomicTableWriter]]. Tables that merge into existing
+  * rows go through [[graft.operators.PartitionedMerge]], which rewrites
+  * only the partitions the staged batch touches: W1, W2 and W6 are
+  * hash-bucketed on their merge key (32 buckets, pinned in a table
+  * sidecar; a mismatched count fails fast), and W7 is
+  * partitioned by `snapshot_date`, so a day overwrites only its own
+  * snapshot. `bucket` is an internal layout column — read gold facts
+  * through [[goldTable]], which hides it.
+  *
   * The thread pools exist to overlap independent *jobs* (each Spark
   * action is already cluster-parallel inside); SparkSession is
   * thread-safe so the reference's connection-per-call dance
   * (daily_scheduler.py:23) has no equivalent here.
   */
-/** @param factBuckets fact tables are stored hash-bucket partitioned on
-  *   their merge key and merges go through
-  *   [[graft.operators.PartitionedMerge]] — only buckets containing
-  *   staged keys are rewritten. This is the DEFAULT (the 100 TB merge
-  *   shape: daily merge cost scales with the staged batch, not the
-  *   table); the bucket count is pinned in a table sidecar and a
-  *   mismatched count fails fast. `bucket` is an internal layout column
-  *   — read gold facts through [[goldTable]], which hides it. Pass
-  *   `None` for whole-table atomic-swap rewrites (small tables,
-  *   strictly atomic multi-partition visibility). */
 final class Orchestrator(spark: SparkSession, bronzeDir: String,
-                         silverDir: String, goldDir: String, stateDir: String,
-                         factBuckets: Option[Int] = Some(32)) {
+                         silverDir: String, goldDir: String, stateDir: String) {
 
   val runLog = new EtlRunLog.Store(spark, s"$stateDir/etl_run_log")
   private val stores = Seq("retail" -> "R-", "wholesale" -> "W-")
   private val entities = Seq("orders", "customers", "products")
+  /** Hash buckets of the bucketed gold tables (W1, W2, W6). */
+  private val FactBuckets = 32
 
   private def silverPath(store: String, table: String) = s"$silverDir/staging_${store}_$table"
   private def goldPath(table: String) = s"$goldDir/$table"
@@ -157,20 +158,6 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
     AtomicTableWriter.read(spark, goldPath(table))
       .map(df => if (df.columns.contains("bucket")) df.drop("bucket") else df)
 
-  /** A gold table created by an earlier release WITHOUT bucketing (no
-    * `bucket` column) must keep the whole-table merge path — stamping
-    * buckets onto it would fail (and rebuilding is the operator's
-    * call). Fresh tables are created bucketed. Answered from the
-    * filesystem: the table is absent, or carries the bucket-count
-    * sidecar or `bucket=` directories. */
-  private def bucketPathUsable(table: String): Boolean = {
-    val root = new Path(goldPath(table))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    !fs.exists(root) ||
-      fs.exists(new Path(root, PartitionedMerge.BucketMeta)) ||
-      fs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-  }
-
   /** R∪W staging view; degenerates to one side when the other is absent
     * (run_etl_with_retries.py:41-44). */
   private def combined(table: String): Option[DataFrame] = {
@@ -204,17 +191,8 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
         Seq(col("order_id")),
         Seq(col("updated_at").desc, col("created_at").desc, col("order_number").desc))
         .withColumn("ingested_at", lit(ingestedAt))
-      factBuckets match {
-        case Some(n) if bucketPathUsable("fact_orders") =>
-          PartitionedMerge.bucketedUpsert(spark, goldPath("fact_orders"),
-            staged, Seq("order_id"), n)
-        case _ =>
-          val merged = AtomicTableWriter.read(spark, goldPath("fact_orders")) match {
-            case Some(target) => MergeOps.upsert(target, staged, Seq("order_id"))
-            case None => staged
-          }
-          write(merged, goldPath("fact_orders"))
-      }
+      PartitionedMerge.bucketedUpsert(spark, goldPath("fact_orders"),
+        staged, Seq("order_id"), FactBuckets)
     },
     () => combined("fact_order_items").foreach { items0 =>
       // same-version item rows can repeat across batch files; exact
@@ -227,24 +205,15 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
         items0.columns.filterNot(Seq("order_id", "line_item_id").contains)
           .map(c => col(c).desc).toSeq)
         .withColumn("ingested_at", lit(ingestedAt))
-      factBuckets match {
-        case Some(n) if bucketPathUsable("fact_order_items") =>
-          PartitionedMerge.bucketedDeleteReload(spark, goldPath("fact_order_items"),
-            items, Seq("order_id"), n)
-        case _ =>
-          val merged = AtomicTableWriter.read(spark, goldPath("fact_order_items")) match {
-            case Some(target) =>
-              MergeOps.deleteReload(target, items, items.select("order_id"), Seq("order_id"))
-            case None => items
-          }
-          write(merged, goldPath("fact_order_items"))
-      }
+      PartitionedMerge.bucketedDeleteReload(spark, goldPath("fact_order_items"),
+        items, Seq("order_id"), FactBuckets)
     })
 
+  /** W3; W4 and W5 in [[mergeProducts]] — full refresh (`TRUNCATE` +
+    * insert): the staged frame replaces the gold table whole. */
   def mergeCustomers(ingestedAt: String): Unit =
     combined("dim_customers").foreach { staged =>
-      write(MergeOps.fullRefresh(staged).withColumn("ingested_at", lit(ingestedAt)),
-        goldPath("dim_customers"))
+      write(staged.withColumn("ingested_at", lit(ingestedAt)), goldPath("dim_customers"))
     }
 
   def mergeProducts(ingestedAt: String): Unit = sideBySide(
@@ -269,38 +238,23 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
         .withColumn("ingested_at", lit(ingestedAt))
       // W6 merges through the same bucketed path as the facts (W1/W2):
       // today the table is dim-sized, but an upsert keyed on sku must
-      // scale with the staged batch, not the table — whole-table
-      // rewrite survives only as the legacy/opt-out path
-      factBuckets match {
-        case Some(n) if bucketPathUsable("fact_current_inventory") =>
-          PartitionedMerge.bucketedUpsert(spark,
-            goldPath("fact_current_inventory"), current, Seq("sku"), n)
-        case _ =>
-          val merged = AtomicTableWriter.read(spark, goldPath("fact_current_inventory")) match {
-            case Some(target) => MergeOps.upsert(target, current, Seq("sku"))
-            case None => current
-          }
-          write(merged, goldPath("fact_current_inventory"))
-      }
+      // scale with the staged batch, not the table
+      PartitionedMerge.bucketedUpsert(spark,
+        goldPath("fact_current_inventory"), current, Seq("sku"), FactBuckets)
 
-      // W7 — idempotent snapshot append keyed (sku, snapshot_date)
+      // W7 — idempotent snapshot append keyed (sku, snapshot_date): a
+      // same-day rerun upserts today's partition, older days stay as
+      // written (run_logs.txt:455-461)
       val today = LocalDate.now().toString
       val todays = spark.read.parquet(goldPath("fact_current_inventory"))
         .select(col("sku"), col("available"), col("committed"), col("on_hand"),
           col("incoming"), col("reserved"))
         .withColumn("snapshot_date", lit(today))
         .withColumn("ingested_at", lit(ingestedAt))
-      val merged2 = AtomicTableWriter.read(spark, goldPath("inventory_snapshot")) match {
-        case Some(target) =>
-          MergeOps.snapshotAppend(target, todays, Seq("sku", "snapshot_date"))
-        case None => todays
-      }
-      write(merged2, goldPath("inventory_snapshot"), Seq("snapshot_date"))
+      PartitionedMerge.upsert(spark, goldPath("inventory_snapshot"), todays,
+        Seq("sku", "snapshot_date"), "snapshot_date")
     }
   }
-
-  private def write(df: DataFrame, path: String, partitionBy: Seq[String]): Unit =
-    AtomicTableWriter.overwrite(df, path, partitionBy)
 
   /** The daily run: parallel staging → gate → serial merges → hook
     * (daily_scheduler.py:150-218). Returns true iff everything

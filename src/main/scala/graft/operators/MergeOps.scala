@@ -4,19 +4,20 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The merge engine (SURVEY §2.8 W1–W7): upsert / full-refresh /
-  * delete-reload / snapshot-append re-expressed as DataFrame
-  * composition. No Delta/Iceberg jars are present, so MERGE is emulated
-  * as `staged ∪ (target ⟕anti staged)` and persisted via
-  * `AtomicTableWriter` (write-temp + atomic swap ≈ the reference's
-  * per-entity Postgres transaction, run_etl_with_retries.py:60-94).
+/** The merge engine (SURVEY §2.8 W1–W7) re-expressed as DataFrame
+  * composition: keep-latest dedup, upsert (W1, W6, and W7 keyed on
+  * `(sku, snapshot_date)`), delete-reload (W2) and the two-store union.
+  * No Delta/Iceberg jars are present, so MERGE is emulated as
+  * `staged ∪ (target ⟕anti staged)`. These functions only build the
+  * merged frame; [[PartitionedMerge]] applies them to the touched
+  * partitions of a gold table and overwrites just those. The
+  * full-refresh tables (W3–W5) need no merge: their staged frame
+  * replaces the table through [[graft.sources.AtomicTableWriter]].
   *
   * Scale notes (100 TB): the anti-join shuffles target by the merge key
-  * once — on a partitioned target, pair with
-  * `partitionOverwriteMode=dynamic` so only partitions containing
-  * staged keys rewrite (SURVEY §7.6). Staged batches are typically tiny
-  * relative to target → Spark broadcasts the staged key set
-  * automatically under AQE.
+  * once, over the touched partitions only (SURVEY §7.6). Staged batches
+  * are typically tiny relative to target → Spark broadcasts the staged
+  * key set automatically under AQE.
   */
 object MergeOps {
 
@@ -49,18 +50,6 @@ object MergeOps {
                    keys: Seq[String]): DataFrame =
     target.join(stagedKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(stagedRows)
-
-  /** W3–W5 — full refresh (`TRUNCATE` + insert): trivially the staged
-    * frame; kept for a uniform job registry. */
-  def fullRefresh(staged: DataFrame): DataFrame = staged
-
-  /** W7 — idempotent snapshot append: upsert on (keys..., snapshot key)
-    * so a same-day re-run overwrites rather than duplicates
-    * (run_logs.txt:455-461). The result is the whole snapshot table:
-    * `Orchestrator` rewrites all of `inventory_snapshot` with it through
-    * [[graft.sources.AtomicTableWriter]], partitioned by snapshot date. */
-  def snapshotAppend(snapshots: DataFrame, todays: DataFrame, keys: Seq[String]): DataFrame =
-    upsert(snapshots, todays, keys)
 
   /** U1 — two-store federation: union staged frames per store; degenerate
     * single-side case allowed (run_etl_with_retries.py:41-44). */

@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Partition-pruned merge: the 100 TB shape of W1/W2 (SURVEY §7.6).
+/** Partition-pruned merge (SURVEY §7.6): the one write path of every
+  * gold table that merges into existing rows — W1, W2 and W6 on hash
+  * buckets, W7 on `snapshot_date`.
   *
   * A whole-table `staged ∪ (target ⟕anti staged)` rewrite reads and
   * rewrites 100 TB to merge a 100 GB batch. When the target is
@@ -116,19 +118,20 @@ object PartitionedMerge {
   /** [[upsert]] for hash-bucketed tables: stamps `bucket` from the
     * first merge key, validates + pins the bucket count. */
   def bucketedUpsert(spark: SparkSession, targetPath: String, staged: DataFrame,
-                     keys: Seq[String], nBuckets: Int): Seq[String] = {
-    validateBucketCount(spark, targetPath, nBuckets)
-    val touched = upsert(spark, targetPath,
-      staged.withColumn("bucket", bucketOf(keys.head, nBuckets)), keys, "bucket")
-    writeBucketCount(spark, targetPath, nBuckets)
-    touched
-  }
+                     keys: Seq[String], nBuckets: Int): Seq[String] =
+    bucketed(spark, targetPath, staged, keys, nBuckets)(upsert)
 
   /** [[deleteReload]] for hash-bucketed tables. */
   def bucketedDeleteReload(spark: SparkSession, targetPath: String, staged: DataFrame,
-                           keys: Seq[String], nBuckets: Int): Seq[String] = {
+                           keys: Seq[String], nBuckets: Int): Seq[String] =
+    bucketed(spark, targetPath, staged, keys, nBuckets)(deleteReload)
+
+  private def bucketed(spark: SparkSession, targetPath: String, staged: DataFrame,
+                       keys: Seq[String], nBuckets: Int)(
+      merge: (SparkSession, String, DataFrame, Seq[String], String) => Seq[String]
+  ): Seq[String] = {
     validateBucketCount(spark, targetPath, nBuckets)
-    val touched = deleteReload(spark, targetPath,
+    val touched = merge(spark, targetPath,
       staged.withColumn("bucket", bucketOf(keys.head, nBuckets)), keys, "bucket")
     writeBucketCount(spark, targetPath, nBuckets)
     touched
@@ -138,44 +141,34 @@ object PartitionedMerge {
     * `partCol` must exist in staged with target-compatible values.
     * Creates the table if absent. Returns the touched partition values. */
   def upsert(spark: SparkSession, targetPath: String, staged: DataFrame,
-             keys: Seq[String], partCol: String): Seq[String] = {
-    val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(targetPath))) {
-      staged.write.partitionBy(partCol).mode("overwrite").parquet(targetPath)
-      return staged.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-    }
-    val parts = staged.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val target = spark.read.parquet(targetPath)
-      // partition-pruned scan: only directories for touched values are read
-      .filter(col(partCol).cast("string").isin(parts: _*))
-    val merged = MergeOps.upsert(target.select(staged.columns.map(col): _*), staged, keys)
-    merged.write.mode("overwrite").partitionBy(partCol)
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(targetPath)
-    parts
-  }
+             keys: Seq[String], partCol: String): Seq[String] =
+    pruned(spark, targetPath, staged, partCol)(MergeOps.upsert(_, staged, keys))
 
   /** Delete-matched + reload (W2) with the same pruning. */
   def deleteReload(spark: SparkSession, targetPath: String, stagedRows: DataFrame,
-                   keys: Seq[String], partCol: String): Seq[String] = {
+                   keys: Seq[String], partCol: String): Seq[String] =
+    pruned(spark, targetPath, stagedRows, partCol)(
+      MergeOps.deleteReload(_, stagedRows, stagedRows.select(keys.map(col): _*), keys))
+
+  /** Steps 1–4 of the object doc around `merge`, which maps the pruned
+    * target (projected to the staged columns) to the touched partitions'
+    * new rows. An absent table is created from `staged`. */
+  private def pruned(spark: SparkSession, targetPath: String, staged: DataFrame,
+                     partCol: String)(merge: DataFrame => DataFrame): Seq[String] = {
     val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(targetPath))) {
-      stagedRows.write.partitionBy(partCol).mode("overwrite").parquet(targetPath)
-      return stagedRows.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-    }
-    val parts = stagedRows.select(col(partCol).cast("string")).distinct()
+    val exists = fs.exists(new Path(targetPath))
+    if (!exists) staged.write.partitionBy(partCol).mode("overwrite").parquet(targetPath)
+    val parts = staged.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    val target = spark.read.parquet(targetPath)
-      .filter(col(partCol).cast("string").isin(parts: _*))
-    val merged = MergeOps.deleteReload(
-      target.select(stagedRows.columns.map(col): _*),
-      stagedRows, stagedRows.select(keys.map(col): _*), keys)
-    merged.write.mode("overwrite").partitionBy(partCol)
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(targetPath)
+    if (exists) {
+      val target = spark.read.parquet(targetPath)
+        // partition-pruned scan: only directories for touched values are read
+        .filter(col(partCol).cast("string").isin(parts: _*))
+      merge(target.select(staged.columns.map(col): _*))
+        .write.mode("overwrite").partitionBy(partCol)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(targetPath)
+    }
     parts
   }
 }

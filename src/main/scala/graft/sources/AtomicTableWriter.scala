@@ -3,19 +3,25 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe table persistence: write to a temp dir, then swap.
+/** Whole-table persistence for tables that are only ever replaced
+  * whole: the silver staging batches and the full-refresh gold tables
+  * (W3–W5). Gold tables that merge into existing rows go through
+  * [[graft.operators.PartitionedMerge]] instead.
   *
   * The reference gets atomicity from one Postgres transaction per entity
   * (run_etl_with_retries.py:60-94). Without a transactional table format
   * we emulate: write `<table>.__tmp`, rename current → `.__old`, rename
-  * tmp → live, drop old. A crash mid-swap leaves either the old or the
-  * new table plus debris dirs — never a half-written live table. Rename
-  * is atomic on HDFS and local FS; on object stores, front with a
+  * tmp → live, drop old. A reader never sees a half-written live table.
+  * A kill between the two renames, though, leaves no live table (only
+  * `.__old` and `.__tmp`) until the next overwrite replaces it: [[read]]
+  * returns `None` meanwhile, and the next overwrite drops `.__old`. That
+  * is safe only because no caller reads such a table to write it back.
+  * Rename is atomic on HDFS and local FS; on object stores, front with a
   * manifest/catalog pointer instead (documented limitation, SURVEY §7.5).
   */
 object AtomicTableWriter {
 
-  def overwrite(df: DataFrame, tablePath: String, partitionBy: Seq[String] = Nil): Unit = {
+  def overwrite(df: DataFrame, tablePath: String): Unit = {
     val spark = df.sparkSession
     val fs = new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -26,9 +32,7 @@ object AtomicTableWriter {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old)) fs.delete(old, true)
 
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
+    df.write.mode("overwrite").parquet(tmp.toString)
 
     if (fs.exists(live) && !fs.rename(live, old))
       throw new java.io.IOException(s"atomic swap: cannot retire $live")

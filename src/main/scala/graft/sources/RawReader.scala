@@ -5,15 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.Schemas
 
-/** Bronze-zone reader (SURVEY §2.1 S5–S7).
+/** Bronze-zone reader (SURVEY §2.1 S6–S7).
   *
   * Accepts all raw shapes the reference's loaders tolerate
   * (incremental_loaders.py:115-126):
   *   1. `{metadata:{...}, data:[{node:{...}}, ...]}` — extractor envelope
   *   2. `{data: {<entity>: {edges: [...]}}}`         — raw GraphQL response
   *   3. `[{node:{...}}, ...]`                        — bare edge list
-  *   4. one node per line (JSONL)                    — bulk-operations
-  *      export (run_logs.txt:144-148)
   * and edges with or without the `node` wrapper.
   *
   * Returns one row per node with the declared node schema plus lineage
@@ -63,11 +61,4 @@ object RawReader {
     env.select(col("metadata"), col("_source_file"), explode(edges).as("edge"))
       .select(unwrapEdge(node).as("node"), col("metadata"), col("_source_file"))
       .select(col("node.*"), col("metadata"), col("_source_file"))
-
-  /** Bulk-operations JSONL: one node per line (run_logs.txt:144-148).
-    * Line-delimited is Spark's native JSON format — fully splittable,
-    * so a 100 TB export parallelizes by HDFS block. */
-  def readJsonl(spark: SparkSession, node: StructType, path: String): DataFrame =
-    spark.read.schema(node).json(path)
-      .withColumn("_source_file", input_file_name())
 }

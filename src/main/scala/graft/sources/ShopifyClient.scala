@@ -5,12 +5,12 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 
-/** Driver-side Shopify Admin GraphQL client (SURVEY §2.1 S1–S5):
+/** Driver-side Shopify Admin GraphQL client (SURVEY §2.1 S1–S3, S6):
   * cursor-paginated fetch with a page-safety cap, ≥interval rate
   * limiting, server-side incremental pushdown (`updated_at:>` search
   * filters — the source-level equivalent of DSv2
-  * `SupportsPushDownFilters`), the retired-but-supported bulk-operations
-  * JSONL export, and the raw-file envelope sink RawReader consumes.
+  * `SupportsPushDownFilters`), and the raw-file envelope sink RawReader
+  * consumes.
   *
   * The transport is pluggable so the client is testable without
   * network; the default uses `java.net.http`. JSON handling uses the
@@ -108,73 +108,12 @@ final class ShopifyClient(
     Files.write(path, body.getBytes(StandardCharsets.UTF_8))
     path.toString
   }
-
-  /** S5 — bulk-operations export: start the async bulk query, poll
-    * status every `pollIntervalMs` until COMPLETED, stream the JSONL to
-    * `outPath` via temp-file + atomic rename (run_logs.txt:17-148,
-    * 611-637). Returns the object count reported by the API. */
-  def runBulkExport(bulkQuery: String, outPath: String,
-                    pollIntervalMs: Long = 15000, maxPolls: Int = 1000): Long = {
-    val start = mapper.createObjectNode()
-    start.put("query",
-      "mutation { bulkOperationRunQuery(query: \"\"\"" + bulkQuery + "\"\"\") {" +
-        " bulkOperation { id status } userErrors { field message } } }")
-    val started = post(mapper.writeValueAsString(start))
-      .path("data").path("bulkOperationRunQuery")
-    val errs = started.path("userErrors")
-    if (errs.isArray && errs.size() > 0)
-      throw new RuntimeException(s"bulkOperationRunQuery rejected: $errs")
-    val startedId = started.path("bulkOperation").path("id").asText(null)
-
-    val statusQuery = """{ currentBulkOperation { id status objectCount url errorCode } }"""
-    var polls = 0
-    while (polls < maxPolls) {
-      sleeper(pollIntervalMs)
-      val req = mapper.createObjectNode()
-      req.put("query", statusQuery)
-      val st = post(mapper.writeValueAsString(req)).path("data").path("currentBulkOperation")
-      // currentBulkOperation may still be a PREVIOUS operation; only a
-      // status for OUR id counts (otherwise yesterday's COMPLETED export
-      // would be silently downloaded as today's)
-      val stId = st.path("id").asText(null)
-      val matches = startedId == null || stId == null || stId == startedId
-      (if (matches) st.path("status").asText("") else "") match {
-        case "COMPLETED" =>
-          val dl = st.path("url").asText(null)
-          val count = st.path("objectCount").asLong(0)
-          if (dl != null) {
-            val tmp = Paths.get(outPath + ".tmp")
-            Files.createDirectories(tmp.getParent)
-            Files.write(tmp, transport.get(dl).getBytes(StandardCharsets.UTF_8))
-            Files.move(tmp, Paths.get(outPath),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          } else if (count > 0) {
-            // objects reported but no download url: inconsistent — do
-            // not let a stale file at outPath pass as this export
-            throw new RuntimeException(
-              s"bulk operation COMPLETED with objectCount=$count but no url")
-          } else {
-            // legitimately empty export: clear any stale previous file
-            // so readers never consume yesterday's JSONL as today's
-            Files.deleteIfExists(Paths.get(outPath))
-          }
-          return count
-        case "FAILED" =>
-          throw new RuntimeException(
-            s"bulk operation failed: ${st.path("errorCode").asText("")}")
-        case _ => polls += 1
-      }
-    }
-    throw new RuntimeException(s"bulk operation did not complete in $maxPolls polls")
-  }
 }
 
 object ShopifyClient {
   /** Pluggable HTTP layer — swap for a fake in tests. */
   trait Transport extends Serializable {
     def post(url: String, body: String, headers: Map[String, String]): String
-    def get(url: String): String
   }
 
   lazy val httpTransport: Transport = new Transport {
@@ -186,9 +125,5 @@ object ShopifyClient {
       client.send(b.build(),
         java.net.http.HttpResponse.BodyHandlers.ofString()).body()
     }
-    def get(url: String): String =
-      client.send(
-        java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString()).body()
   }
 }

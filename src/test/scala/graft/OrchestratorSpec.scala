@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import graft.operators.PartitionedMerge
 import graft.sources.AtomicTableWriter
 
@@ -47,7 +47,7 @@ class OrchestratorSpec extends SparkSpec {
     assert(orch.runDaily(() => hookFired = true))
     assert(hookFired) // O7: post-success hook
 
-    // default path is bucket-partitioned; goldTable hides the layout column
+    // gold facts are bucket-partitioned; goldTable hides the layout column
     val orders = orch.goldTable("fact_orders").get
     assert(!orders.columns.contains("bucket"))
     assert(orders.count() == 3) // R-5551234, R-5551235, W-7771
@@ -73,7 +73,7 @@ class OrchestratorSpec extends SparkSpec {
     // rerun the whole day: tables unchanged modulo ingested_at, which the
     // reference's ON CONFLICT DO UPDATE also refreshes per run
     val before = orders.drop("ingested_at").orderBy("order_id").collect().toSeq
-    // W6 rides the bucketed merge path by default, like the facts
+    // W6 rides the bucketed merge path, like the facts
     val invBefore = orch.goldTable("fact_current_inventory").get
       .drop("ingested_at").orderBy("sku").collect().toSeq
     assert(spark.read.parquet(s"$root/gold/fact_current_inventory")
@@ -115,7 +115,7 @@ class OrchestratorSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-bucketed").toString
     setupBronze(root)
     val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
-      s"$root/gold", s"$root/state", factBuckets = Some(4))
+      s"$root/gold", s"$root/state")
     assert(orch.runDaily())
     val orders = spark.read.parquet(s"$root/gold/fact_orders")
     assert(orders.count() == 3)
@@ -136,7 +136,7 @@ class OrchestratorSpec extends SparkSpec {
       val root = Files.createTempDirectory(name).toString
       setupBronze(root)
       val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
-        s"$root/gold", s"$root/state", factBuckets = Some(4))
+        s"$root/gold", s"$root/state")
       assert(orch.runDaily())
       stageDay2Orders(root, orch)
       (root, orch)
@@ -146,9 +146,10 @@ class OrchestratorSpec extends SparkSpec {
     clean.mergeOrders(ingestedAt)
 
     val (root, faulty) = dayTwo("graft-merge-fault")
-    // W2's pinned bucket count disagrees → its branch fails fast
+    // W2's pinned bucket count disagrees → its branch fails fast (the
+    // pin must exceed every existing bucket of the 32, hence 64)
     val items = s"$root/gold/fact_order_items"
-    PartitionedMerge.pinBucketCount(spark, items, 8)
+    PartitionedMerge.pinBucketCount(spark, items, 64)
     val e = intercept[IllegalStateException](faulty.mergeOrders(ingestedAt))
     assert(e.getMessage.contains("bucket-count mismatch"))
     // the W1 branch had committed before the failure surfaced
@@ -158,7 +159,7 @@ class OrchestratorSpec extends SparkSpec {
     assert(!Files.list(java.nio.file.Paths.get(root, "gold/fact_orders")).iterator()
       .asScala.exists(_.getFileName.toString.startsWith(".spark-staging")))
 
-    PartitionedMerge.pinBucketCount(spark, items, 4)
+    PartitionedMerge.pinBucketCount(spark, items, 32)
     faulty.mergeOrders(ingestedAt)
     for ((table, keys) <- Seq("fact_orders" -> Seq("order_id"),
         "fact_order_items" -> Seq("order_id", "line_item_id"))) {
@@ -167,21 +168,30 @@ class OrchestratorSpec extends SparkSpec {
     }
   }
 
-  test("legacy non-bucketed gold tables keep the whole-table merge path") {
-    val root = Files.createTempDirectory("graft-legacy").toString
+  test("W7 rewrites only today's snapshot partition; earlier days keep their files") {
+    val root = Files.createTempDirectory("graft-snapshot").toString
     setupBronze(root)
-    // day 1 under the old default: whole-table, no bucket column
-    val legacy = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
-      s"$root/gold", s"$root/state", factBuckets = None)
-    assert(legacy.runDaily())
-    assert(!spark.read.parquet(s"$root/gold/fact_orders").columns.contains("bucket"))
-    // day 2 under the new bucketed default: must not crash, must merge
-    val current = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
-      s"$root/gold", s"$root/state2")
-    assert(current.runDaily())
-    val orders = current.goldTable("fact_orders").get
-    assert(orders.count() == 3) // merged, not duplicated or crashed
-    assert(!spark.read.parquet(s"$root/gold/fact_orders").columns.contains("bucket"))
+    val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
+      s"$root/gold", s"$root/state")
+    for ((store, prefix) <- Seq("retail" -> "R-", "wholesale" -> "W-"))
+      orch.stageEntity(store, prefix, "products")
+    orch.mergeProducts("2025-12-08T10:00:00")
+    // an earlier day's snapshot, as a run on 2000-01-01 would have left it
+    val snap = s"$root/gold/inventory_snapshot"
+    spark.read.parquet(snap).withColumn("snapshot_date", lit("2000-01-01"))
+      .write.mode("append").partitionBy("snapshot_date").parquet(snap)
+    val old = java.nio.file.Paths.get(snap, "snapshot_date=2000-01-01")
+    def files() = Files.list(old).iterator().asScala
+      .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f)).toMap
+    def oldRows() = spark.read.parquet(snap)
+      .filter(col("snapshot_date").cast("string") === "2000-01-01").count()
+    val (filesBefore, rowsBefore, total) = (files(), oldRows(), spark.read.parquet(snap).count())
+    assert(filesBefore.nonEmpty && rowsBefore > 0)
+
+    orch.mergeProducts("2025-12-08T11:00:00") // a same-day rerun
+    assert(files() == filesBefore)
+    assert(oldRows() == rowsBefore)
+    assert(spark.read.parquet(snap).count() == total)
   }
 
   test("two versions of one order across bronze files collapse to the latest") {

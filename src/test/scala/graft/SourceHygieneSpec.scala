@@ -19,6 +19,11 @@ import scala.jdk.CollectionConverters._
   * Reachability gate: every file under src/main/scala is reachable by
   * name from an entry point, so library code that nothing runs cannot
   * accumulate unseen.
+  *
+  * Benchmark pin: the traced ETL benchmark copies `Orchestrator.runDaily`
+  * and refuses to run when its source no longer hashes to the digest
+  * pinned in perfbench/harness/EtlBench.scala; checked here so the drift
+  * shows up in the test suite, not first in a benchmark run.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -90,5 +95,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(allowed.keySet.subsetOf(unreached),
       "allow-listed files that are now reached or gone (drop them from " +
         "the list): " + (allowed.keySet -- unreached).mkString(", "))
+  }
+
+  test("Orchestrator.runDaily still hashes to the benchmark's pinned digest") {
+    val harness = new String(
+      Files.readAllBytes(Paths.get("perfbench/harness/EtlBench.scala")), "UTF-8")
+    val pinned = "val RunDailyDigest = \"([0-9a-f]{64})\"".r
+      .findFirstMatchIn(harness).map(_.group(1))
+    assert(pinned.isDefined, "no RunDailyDigest literal in EtlBench.scala")
+    // the lines from `def runDaily(` to its closing brace, as EtlBench.runDailySource
+    val lines = Files.readAllLines(Paths.get("src/main/scala/graft/Orchestrator.scala"))
+      .asScala.map(_.stripTrailing)
+    val from = lines.indexWhere(_.startsWith("  def runDaily("))
+    val to = lines.indexWhere(_ == "  }", from)
+    assert(from >= 0 && to > from, "no Orchestrator.runDaily")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.slice(from, to + 1).mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    assert(digest == pinned.get,
+      "Orchestrator.runDaily changed: the traced benchmark copies it, so bring " +
+        "EtlEpisode.tracedRun in line and pin the new digest in EtlBench.RunDailyDigest")
   }
 }

@@ -48,14 +48,6 @@ class MergeOpsSpec extends SparkSpec {
     assert(out.map(_._3).toSeq == Seq("v2", "v4"))
   }
 
-  test("W7 snapshotAppend: same-day rerun overwrites, not duplicates") {
-    val day1 = Seq(("SKU1", "2025-12-08", 5)).toDF("sku", "snapshot_date", "available")
-    val day1Rerun = Seq(("SKU1", "2025-12-08", 7)).toDF("sku", "snapshot_date", "available")
-    val out = MergeOps.snapshotAppend(day1, day1Rerun, Seq("sku", "snapshot_date"))
-    assert(out.count() == 1)
-    assert(out.head().getAs[Int]("available") == 7)
-  }
-
   test("W6 inventory pipeline: dedup-latest per SKU + retail-first gap fill") {
     def inv(rows: (String, String, Int)*) =
       rows.toDF("product_id", "variant_id", "available")

@@ -30,14 +30,6 @@ class RawReaderSpec extends SparkSpec {
     assert(df.select("title").as[String].head() == "Widget")
   }
 
-  test("JSONL bulk export: one node per line") {
-    val path = Fixtures.writeTemp(
-      Fixtures.customerNode + "\n" + Fixtures.customerNodeSparse + "\n", "c.jsonl")
-    val df = RawReader.readJsonl(spark, Schemas.customerNode, path)
-    assert(df.count() == 2)
-    assert(df.columns.contains("_source_file"))
-  }
-
   test("mixed edges: some with node wrapper, some without") {
     val mixed = s"""[{"node": ${Fixtures.customerNode}}, ${Fixtures.customerNodeSparse}]"""
     val path = Fixtures.writeTemp(mixed, "m.json")

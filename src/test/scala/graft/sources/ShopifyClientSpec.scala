@@ -12,19 +12,8 @@ class ShopifyClientSpec extends SparkSpec {
   /** Fake Shopify serving `pages` of order edges with cursors. */
   private class FakeTransport(pages: Seq[Seq[String]]) extends ShopifyClient.Transport {
     val posts = mutable.Buffer[String]()
-    var jsonl = ""
-    var bulkPollsUntilReady = 2
     def post(url: String, body: String, headers: Map[String, String]): String = {
       posts += body
-      if (body.contains("bulkOperationRunQuery"))
-        return """{"data": {"bulkOperationRunQuery": {"bulkOperation": {"id": "b1", "status": "CREATED"}}}}"""
-      if (body.contains("currentBulkOperation")) {
-        if (bulkPollsUntilReady > 0) {
-          bulkPollsUntilReady -= 1
-          return """{"data": {"currentBulkOperation": {"id": "b1", "status": "RUNNING", "objectCount": 0}}}"""
-        }
-        return """{"data": {"currentBulkOperation": {"id": "b1", "status": "COMPLETED", "objectCount": 3, "url": "https://example/dl"}}}"""
-      }
       // cursor pagination: "after":"cN" selects page N+1
       val after = """"after":"c(\d+)"""".r.findFirstMatchIn(body).map(_.group(1).toInt)
       val idx = after.map(_ + 1).getOrElse(0)
@@ -34,7 +23,6 @@ class ShopifyClientSpec extends SparkSpec {
          |  "edges": [${page.mkString(",")}],
          |  "pageInfo": {"hasNextPage": $hasNext, "endCursor": "c$idx"}}}}""".stripMargin
     }
-    def get(url: String): String = jsonl
   }
 
   private def edge(id: Long, updated: String): String =
@@ -64,7 +52,6 @@ class ShopifyClientSpec extends SparkSpec {
       def post(url: String, body: String, headers: Map[String, String]): String =
         s"""{"data": {"orders": {"edges": [${edge(1, "2025-01-01T00:00:00Z")}],
            |"pageInfo": {"hasNextPage": true, "endCursor": "cX"}}}}""".stripMargin
-      def get(url: String): String = ""
     }
     assert(client(t).fetchAllPages("q", "orders").size == 10) // maxPages
   }
@@ -86,43 +73,6 @@ class ShopifyClientSpec extends SparkSpec {
     assert(c.searchFilter(Some("a"), Some("b")) == "updated_at:>'a' AND updated_at:<'b'")
     c.extractIncremental("q", "orders", Some("2025-12-01"))
     assert(t.posts.head.contains("updated_at:&gt;") || t.posts.head.contains("updated_at:>"))
-  }
-
-  test("S5 bulk export polls until COMPLETED then atomically lands JSONL") {
-    val t = new FakeTransport(Seq(Seq.empty))
-    t.jsonl = "{\"id\": 1}\n{\"id\": 2}\n{\"id\": 3}\n"
-    val out = java.nio.file.Files.createTempDirectory("bulk").resolve("c.jsonl").toString
-    val n = client(t).runBulkExport("{ customers { edges { node { id } } } }",
-      out, pollIntervalMs = 1, maxPolls = 10)
-    assert(n == 3)
-    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(out)).linesIterator.size == 3)
-  }
-
-  test("S5 empty bulk export clears a stale JSONL; count>0 without url throws") {
-    // empty export (url null, objectCount 0): stale file must not survive
-    val emptyT = new ShopifyClient.Transport {
-      def post(url: String, body: String, headers: Map[String, String]): String =
-        if (body.contains("bulkOperationRunQuery"))
-          """{"data": {"bulkOperationRunQuery": {"bulkOperation": {"id": "b1", "status": "CREATED"}}}}"""
-        else """{"data": {"currentBulkOperation": {"id": "b1", "status": "COMPLETED", "objectCount": 0, "url": null}}}"""
-      def get(url: String): String = ""
-    }
-    val out = java.nio.file.Files.createTempDirectory("bulk2").resolve("c.jsonl")
-    java.nio.file.Files.writeString(out, "{\"id\": 99}\n") // yesterday's export
-    assert(client(emptyT).runBulkExport("q", out.toString, pollIntervalMs = 1, maxPolls = 3) == 0)
-    assert(!java.nio.file.Files.exists(out), "stale JSONL must be cleared")
-    // inconsistent: objects reported but nothing to download
-    val badT = new ShopifyClient.Transport {
-      def post(url: String, body: String, headers: Map[String, String]): String =
-        if (body.contains("bulkOperationRunQuery"))
-          """{"data": {"bulkOperationRunQuery": {"bulkOperation": {"id": "b1", "status": "CREATED"}}}}"""
-        else """{"data": {"currentBulkOperation": {"id": "b1", "status": "COMPLETED", "objectCount": 5, "url": null}}}"""
-      def get(url: String): String = ""
-    }
-    val e = intercept[RuntimeException] {
-      client(badT).runBulkExport("q", out.toString, pollIntervalMs = 1, maxPolls = 3)
-    }
-    assert(e.getMessage.contains("no url"))
   }
 
   test("end-to-end: fake API -> envelope file -> RawReader -> Flatten") {

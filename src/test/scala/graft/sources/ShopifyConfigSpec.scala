@@ -60,7 +60,6 @@ class ShopifyConfigSpec extends AnyFunSuite {
         """{"data": {"orders": {"edges": [],
           |  "pageInfo": {"hasNextPage": false, "endCursor": null}}}}""".stripMargin
       }
-      def get(url: String): String = ""
     }
     val fromEnv = ShopifyConfig.client(
       ShopifyConfig.load("retail", Map(
