@@ -4,9 +4,9 @@ import java.time.{LocalDate, LocalDateTime}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Schemas
 import graft.operators.{InventoryPipeline, MergeOps, PartitionedMerge}
 import graft.silver.Flatten
 import graft.sources.{AtomicTableWriter, RawReader}
@@ -84,6 +84,14 @@ object Orchestrator {
   * snapshot. `bucket` is an internal layout column — read gold facts
   * through [[goldTable]], which hides it.
   *
+  * Each daily batch is computed once. Staging parses an entity's bronze
+  * files once, into a frame persisted for the call, and writes every
+  * silver table and the watermark from it; a merge persists its staged
+  * batch likewise (see [[graft.operators.PartitionedMerge]]). Silver is
+  * read with the schemas [[graft.silver.Flatten.silverSchemas]] derives
+  * from the flatteners, and merged gold with its staged frame's schema,
+  * so no job infers a schema from the files.
+  *
   * The thread pools exist to overlap independent *jobs* (each Spark
   * action is already cluster-parallel inside); SparkSession is
   * thread-safe so the reference's connection-per-call dance
@@ -103,40 +111,20 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
 
   /** PHASE 1 — stage one (store, entity): bronze JSON → flatten →
     * conformed silver parquet; returns the batch watermark
-    * (daily_scheduler.py:100-148). */
+    * (daily_scheduler.py:100-148). The bronze batch is parsed once into
+    * a frame persisted for the call: every silver table and the
+    * watermark read it. */
   def stageEntity(store: String, prefix: String, entity: String): Option[String] = {
-    val path = s"$bronzeDir/$store/$entity"
     val now = LocalDateTime.now()
     val runId = runLog.logStart(store, entity, now)
     val result = Try {
-      entity match {
-        case "orders" =>
-          val nodes = RawReader.readJson(spark, Schemas.orderNode, "orders", path)
-          write(Flatten.conform(Flatten.orders(nodes, prefix), "fact_orders"),
-            silverPath(store, "fact_orders"))
-          write(Flatten.conform(Flatten.orderItems(nodes, prefix), "fact_order_items"),
-            silverPath(store, "fact_order_items"))
-          Flatten.watermark(nodes)
-        case "customers" =>
-          val nodes = RawReader.readJson(spark, Schemas.customerNode, "customers", path)
-          write(Flatten.conform(Flatten.customers(nodes, prefix), "dim_customers"),
-            silverPath(store, "dim_customers"))
-          Flatten.watermark(nodes)
-        case "products" =>
-          val nodes = RawReader.readJson(spark, Schemas.productNode, "products", path)
-          val ts = now.format(EtlRunLog.ISO)
-          val day = now.toLocalDate.toString
-          write(Flatten.conform(Flatten.products(nodes), "dim_products"),
-            silverPath(store, "dim_products"))
-          write(Flatten.conform(Flatten.variants(nodes), "dim_product_variants"),
-            silverPath(store, "dim_product_variants"))
-          write(Flatten.conform(Flatten.currentInventory(nodes), "fact_current_inventory"),
-            silverPath(store, "fact_current_inventory"))
-          write(Flatten.conform(Flatten.inventorySnapshot(nodes, ts, day), "inventory_snapshot"),
-            silverPath(store, "inventory_snapshot"))
-          Flatten.watermark(nodes)
-        case other => throw new IllegalArgumentException(s"unknown entity $other")
-      }
+      val nodes = RawReader.readJson(spark, Flatten.nodeSchema(entity), entity,
+        s"$bronzeDir/$store/$entity").persist()
+      try {
+        Flatten.silverTables(entity, nodes, prefix, now.format(EtlRunLog.ISO),
+          now.toLocalDate.toString).foreach { case (table, df) => write(df, silverPath(store, table)) }
+        Flatten.watermark(nodes)
+      } finally nodes.unpersist()
     }
     result match {
       case Success(wm) =>
@@ -149,14 +137,18 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
   private def write(df: DataFrame, path: String): Unit =
     AtomicTableWriter.overwrite(df, path)
 
+  private lazy val silverSchemas = Flatten.silverSchemas(spark)
+
   private def silver(store: String, table: String): Option[DataFrame] =
-    AtomicTableWriter.read(spark, silverPath(store, table))
+    AtomicTableWriter.read(spark, silverPath(store, table), silverSchemas(table))
 
   /** Gold-table reader for consumers: hides internal layout columns
     * (the hash `bucket` partition column on bucketed fact tables). */
-  def goldTable(table: String): Option[DataFrame] =
-    AtomicTableWriter.read(spark, goldPath(table))
-      .map(df => if (df.columns.contains("bucket")) df.drop("bucket") else df)
+  def goldTable(table: String): Option[DataFrame] = {
+    val path = new Path(goldPath(table))
+    Option.when(path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))(
+      spark.read.parquet(path.toString).drop("bucket"))
+  }
 
   /** R∪W staging view; degenerates to one side when the other is absent
     * (run_etl_with_retries.py:41-44). */
@@ -246,7 +238,7 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
       // same-day rerun upserts today's partition, older days stay as
       // written (run_logs.txt:455-461)
       val today = LocalDate.now().toString
-      val todays = spark.read.parquet(goldPath("fact_current_inventory"))
+      val todays = spark.read.schema(current.schema).parquet(goldPath("fact_current_inventory"))
         .select(col("sku"), col("available"), col("committed"), col("on_hand"),
           col("incoming"), col("reserved"))
         .withColumn("snapshot_date", lit(today))

@@ -14,10 +14,14 @@ import org.apache.spark.sql.functions._
   * full-refresh tables (W3–W5) need no merge: their staged frame
   * replaces the table through [[graft.sources.AtomicTableWriter]].
   *
-  * Scale notes (100 TB): the anti-join shuffles target by the merge key
-  * once, over the touched partitions only (SURVEY §7.6). Staged batches
-  * are typically tiny relative to target → Spark broadcasts the staged
-  * key set automatically under AQE.
+  * Scale notes (100 TB): the anti-join reads the touched partitions
+  * only (SURVEY §7.6). A staged key set under
+  * `spark.sql.autoBroadcastJoinThreshold` (10 MB) is broadcast into it
+  * when the query is planned — the bucketed merge's plan shows
+  * `BroadcastHashJoin LeftAnti BuildRight` over the persisted batch — so
+  * the target is not shuffled. A larger key set shuffles both sides by
+  * the merge key once (sort-merge), which AQE may still turn into a
+  * broadcast at run time.
   */
 object MergeOps {
 

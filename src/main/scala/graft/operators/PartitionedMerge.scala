@@ -13,15 +13,21 @@ import org.apache.spark.sql.functions._
   * partitioned by a column the staged batch also carries (date, tenant,
   * hash bucket), only partitions containing staged keys need to change:
   *
-  *   1. collect the staged batch's distinct partition values (small —
-  *      one shuffle of the batch, a driver list of partition names)
+  *   1. persist the staged batch for the call and collect its distinct
+  *      partition values (small — one shuffle of the batch, a driver
+  *      list of partition names); this computes the batch, and steps
+  *      3–4 read it from the cache
   *   2. read ONLY those partitions of the target (partition pruning —
-  *      no full scan)
+  *      no full scan), with the staged batch's schema, so no job infers
+  *      it from the files
   *   3. merge within them
-  *   4. write back with `partitionOverwriteMode=dynamic`, which
+  *   4. hash-repartition the merged rows on the partition column, so
+  *      each touched partition is written by one task as one file, and
+  *      write back with `partitionOverwriteMode=dynamic`, which
   *      replaces exactly the touched partitions and leaves every other
   *      partition's files untouched (per-partition commit — see the
-  *      durability note below)
+  *      durability note below). An absent table is created by the
+  *      same write.
   *
   * Cost scales with the affected-partition volume, not table volume.
   * For keys with no natural partition column, write the table
@@ -152,23 +158,29 @@ object PartitionedMerge {
 
   /** Steps 1–4 of the object doc around `merge`, which maps the pruned
     * target (projected to the staged columns) to the touched partitions'
-    * new rows. An absent table is created from `staged`. */
+    * new rows. An absent table is created from `staged`. `staged` is
+    * released before this returns, also when it throws, so a caller
+    * that had cached it loses that cache. */
   private def pruned(spark: SparkSession, targetPath: String, staged: DataFrame,
                      partCol: String)(merge: DataFrame => DataFrame): Seq[String] = {
     val fs = new Path(targetPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val exists = fs.exists(new Path(targetPath))
-    if (!exists) staged.write.partitionBy(partCol).mode("overwrite").parquet(targetPath)
-    val parts = staged.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    if (exists) {
-      val target = spark.read.parquet(targetPath)
-        // partition-pruned scan: only directories for touched values are read
-        .filter(col(partCol).cast("string").isin(parts: _*))
-      merge(target.select(staged.columns.map(col): _*))
+    staged.persist()
+    try {
+      val parts = staged.select(col(partCol).cast("string")).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
+      val rows =
+        if (!exists) staged
+        else merge(spark.read.schema(staged.schema).parquet(targetPath)
+          // partition-pruned scan: only directories for touched values are read
+          .filter(col(partCol).cast("string").isin(parts: _*))
+          .select(staged.columns.map(col): _*))
+      // one task, so one file, per touched partition
+      rows.repartition(col(partCol))
         .write.mode("overwrite").partitionBy(partCol)
         .option("partitionOverwriteMode", "dynamic")
         .parquet(targetPath)
-    }
-    parts
+      parts
+    } finally staged.unpersist()
   }
 }

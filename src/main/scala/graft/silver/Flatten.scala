@@ -1,6 +1,6 @@
 package graft.silver
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.ShopifyFunctions._
@@ -200,6 +200,42 @@ object Flatten {
     df.select(declared.map(c =>
       if (present(c)) col(c) else lit(null).as(c)): _*)
   }
+
+  /** The bronze node schema of each entity. */
+  def nodeSchema(entity: String): StructType = entity match {
+    case "orders" => Schemas.orderNode
+    case "customers" => Schemas.customerNode
+    case "products" => Schemas.productNode
+    case other => throw new IllegalArgumentException(s"unknown entity $other")
+  }
+
+  /** The silver tables staged from one entity's bronze nodes, in write
+    * order, each conformed (P8). `snapshotTs`/`snapshotDate` stamp the
+    * inventory snapshot (P7). */
+  def silverTables(entity: String, nodes: DataFrame, prefix: String,
+                   snapshotTs: String, snapshotDate: String): Seq[(String, DataFrame)] = {
+    val tables = entity match {
+      case "orders" => Seq(
+        "fact_orders" -> orders(nodes, prefix),
+        "fact_order_items" -> orderItems(nodes, prefix))
+      case "customers" => Seq("dim_customers" -> customers(nodes, prefix))
+      case "products" => Seq(
+        "dim_products" -> products(nodes),
+        "dim_product_variants" -> variants(nodes),
+        "fact_current_inventory" -> currentInventory(nodes),
+        "inventory_snapshot" -> inventorySnapshot(nodes, snapshotTs, snapshotDate))
+      case other => throw new IllegalArgumentException(s"unknown entity $other")
+    }
+    tables.map { case (table, df) => table -> conform(df, table) }
+  }
+
+  /** Every silver table's schema: [[silverTables]] planned over an empty
+    * batch of each entity's nodes, so no file is read and no job runs. */
+  def silverSchemas(spark: SparkSession): Map[String, StructType] =
+    Seq("orders", "customers", "products").flatMap { entity =>
+      val empty = spark.createDataFrame(java.util.List.of[Row](), nodeSchema(entity))
+      silverTables(entity, empty, "", "", "").map { case (table, df) => table -> df.schema }
+    }.toMap
 
   /** A1 — watermark: max `updatedAt` over a bronze batch (lexicographic
     * ISO compare == chronological; incremental_loaders.py:127-131). */

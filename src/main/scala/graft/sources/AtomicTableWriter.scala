@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Whole-table persistence for tables that are only ever replaced
   * whole: the silver staging batches and the full-refresh gold tables
@@ -44,10 +45,12 @@ object AtomicTableWriter {
     if (fs.exists(old)) fs.delete(old, true)
   }
 
-  def read(spark: SparkSession, tablePath: String): Option[DataFrame] = {
+  /** The live table read with the `schema` it was written with, so no
+    * job infers it from the files. */
+  def read(spark: SparkSession, tablePath: String, schema: StructType): Option[DataFrame] = {
     val fs = new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(tablePath))) Some(spark.read.parquet(tablePath))
+    if (fs.exists(new Path(tablePath))) Some(spark.read.schema(schema).parquet(tablePath))
     else None
   }
 }

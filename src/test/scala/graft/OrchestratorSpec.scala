@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.{col, lit}
 import graft.operators.PartitionedMerge
-import graft.sources.AtomicTableWriter
+import graft.model.Schemas
+import graft.sources.{AtomicTableWriter, RawReader}
 
 /** End-to-end golden test: bronze fixture JSON → full daily run → gold
   * tables, plus the rerun-idempotence property the reference's
@@ -94,7 +95,42 @@ class OrchestratorSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 3)
     AtomicTableWriter.overwrite(Seq(4, 5).toDF("x"), path)
     assert(spark.read.parquet(path).as[Int].collect().toSet == Set(4, 5))
-    assert(AtomicTableWriter.read(spark, path + "-missing").isEmpty)
+    val schema = new org.apache.spark.sql.types.StructType().add("x", "int")
+    assert(AtomicTableWriter.read(spark, path, schema).get.as[Int].collect().toSet == Set(4, 5))
+    assert(AtomicTableWriter.read(spark, path + "-missing", schema).isEmpty)
+  }
+
+  /** Bytes read through the local file system while `f` runs; reads of
+    * Spark's cache do not count. */
+  private def fileBytesRead(f: => Unit): Long = {
+    // registers the local file system's statistics if nothing has yet
+    org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val stats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file")
+    val before = stats.getLong("bytesRead")
+    f
+    stats.getLong("bytesRead") - before
+  }
+
+  test("staging parses the bronze batch once and leaves nothing persisted") {
+    val root = Files.createTempDirectory("graft-stage-once").toString
+    setupBronze(root)
+    val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
+      s"$root/gold", s"$root/state")
+    spark.catalog.clearCache()
+    val onePass = fileBytesRead(RawReader.readJson(spark, Schemas.productNode, "products",
+      s"$root/bronze/retail/products").collect())
+    val staging = fileBytesRead(assert(orch.stageEntity("retail", "R-", "products").isDefined))
+    // four silver tables and the watermark from one parse
+    assert(staging > 0 && staging < 2 * onePass,
+      s"staging read $staging bytes; one read of the batch reads $onePass")
+    assert(spark.sharedState.cacheManager.isEmpty)
+
+    // a silver write that fails still releases the parsed batch
+    Files.writeString(Paths.get(root, "not-a-dir"), "")
+    val broken = new Orchestrator(spark, s"$root/bronze", s"$root/not-a-dir",
+      s"$root/gold", s"$root/state2")
+    intercept[Exception](broken.stageEntity("retail", "R-", "products"))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   /** Day 2's wholesale bronze: order W-7771 updated to a total of 400. */

@@ -47,6 +47,34 @@ class PartitionedMergeSpec extends SparkSpec {
     assert(partFiles(root, "2025-01-03") == before03)
   }
 
+  test("the staged batch is computed once, each touched partition gets one file, the batch is released") {
+    val root = Files.createTempDirectory("pmerge-once").toString + "/t"
+    mkTable(root)
+    val before03 = partFiles(root, "2025-01-03")
+    spark.catalog.clearCache()
+    val computed = spark.sparkContext.longAccumulator("staged rows")
+    // the partition column, which both the partition collect and the write need
+    val day = udf { (id: Long) => computed.add(1); if (id % 2 == 0) "2025-01-01" else "2025-01-02" }
+    val n = 40
+    val staged = spark.range(n).select(
+      concat(lit("s"), col("id").cast("string")).as("k"),
+      day(col("id")).as("day"),
+      col("id").cast("double").as("v"))
+    val touched = PartitionedMerge.upsert(spark, root, staged, Seq("k"), "day")
+    assert(touched == Seq("2025-01-01", "2025-01-02"))
+    assert(computed.value == n) // not once for the partition collect and again for the write
+    touched.foreach(day => assert(partFiles(root, day).size == 1, day))
+    assert(partFiles(root, "2025-01-03") == before03)
+    assert(spark.read.parquet(root).count() == 4 + n)
+    assert(spark.sharedState.cacheManager.isEmpty)
+
+    // a corrupt file in a touched partition fails the merge's write
+    Files.writeString(java.nio.file.Paths.get(root, "day=2025-01-01", "part-corrupt.parquet"), "x")
+    val bad = Seq(("k1", "2025-01-01", 10.0)).toDF("k", "day", "v")
+    intercept[Exception](PartitionedMerge.upsert(spark, root, bad, Seq("k"), "day"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("deleteReload prunes the same way") {
     val root = Files.createTempDirectory("pmerge2").toString + "/t"
     mkTable(root)

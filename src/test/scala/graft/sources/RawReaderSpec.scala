@@ -37,4 +37,15 @@ class RawReaderSpec extends SparkSpec {
     assert(df.select("id").as[String].collect().toSet ==
       Set("gid://shopify/Customer/777", "gid://shopify/Customer/778"))
   }
+
+  test("one directory mixing shapes: every file's nodes are read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-mixed")
+    java.nio.file.Files.writeString(dir.resolve("a.json"),
+      Fixtures.envelope(Seq(Fixtures.customerNode), "retail", "customers"))
+    java.nio.file.Files.writeString(dir.resolve("b.json"),
+      Fixtures.envelopeNested(Seq(Fixtures.customerNodeSparse), "customers"))
+    val df = RawReader.readJson(spark, Schemas.customerNode, "customers", dir.toString)
+    assert(df.select("id").as[String].collect().toSet ==
+      Set("gid://shopify/Customer/777", "gid://shopify/Customer/778"))
+  }
 }
