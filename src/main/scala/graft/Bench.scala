@@ -108,13 +108,11 @@ object Bench {
     catch { case _: Throwable => () }
 
     // pre-warm the shared community-tier graph prep
-    // (Materialize.sharedDurable) and report its build cost as its own
+    // (Materialize.shared) and report its build cost as its own
     // field: q128 is alphabetically first in the tier and was silently
     // paying the whole sort+zipWithIndex+encode build (r13 verdict #4),
     // so Bench owns the warm explicitly.
     val g0 = System.nanoTime()
-    val coldCount0 = graft.operators.Materialize.coldBuildCount
-    val coldSecs0 = graft.operators.Materialize.coldBuildSecs
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def failed(name: String, e: Throwable): Double = {
       errors.getOrElseUpdate(name, Verify.failureReason(e))
@@ -124,14 +122,6 @@ object Bench {
       graft.queries.WarehouseQueries.spGraph(spark, sfDir)
       (System.nanoTime() - g0) / 1e9
     } catch { case e: Throwable => failed("graph_prep", e) }
-    // the warm above only ever shows the warm READ cost; when the
-    // durable cache misses, the true build wall-time must land in the
-    // artifact too (r17 verdict #4). −3 = served warm from a prior
-    // run's on-disk materialization (parsers skip negatives).
-    val graphPrepColdSec =
-      if (graphPrepSec < 0) graphPrepSec // prep crashed: never claim "warm"
-      else if (graft.operators.Materialize.coldBuildCount == coldCount0) -3.0
-      else graft.operators.Materialize.coldBuildSecs - coldSecs0
 
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q120,q121 times just those
     // queries (comma-separated name prefixes); unset = the full battery
@@ -142,14 +132,14 @@ object Bench {
     // pre-warm the shared community ASSIGNMENTS the same way and
     // report the cost as its own field: q212/q246 start from the
     // level-1 Louvain sweep and q180 audits q128's propagation — all
-    // served from durable materializations, so their build (one
-    // node-sized sweep each, cold; a parquet read, warm) must land in
-    // the artifact, not hide inside whichever query runs first. A
-    // BENCH_ONLY subset that selects none of the three consumers skips
-    // the warm (two node-sized sweeps when cold — pure dev-loop drag
-    // there) and reports -2 ("deliberately skipped") — DISTINCT from
-    // -1 ("prep crashed"), so an artifact diff can tell an intentional
-    // skip from a failed build (r16 advice); parsers skip both (< 0).
+    // served from shared materializations, so their build (one
+    // node-sized sweep each) must land in the artifact, not hide
+    // inside whichever query runs first. A BENCH_ONLY subset that
+    // selects none of the three consumers skips the warm (two
+    // node-sized sweeps — pure dev-loop drag there) and reports -2
+    // ("deliberately skipped") — DISTINCT from -1 ("prep crashed"),
+    // so an artifact diff can tell an intentional skip from a failed
+    // build (r16 advice); parsers skip both (< 0).
     val assignConsumers = Set("q180_modularity", "q212_louvain_coarse",
       "q246_louvain_fixpoint")
     val assignPrepSec =
@@ -256,7 +246,7 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
     val line =
-      f"""{"metric":"total","value":$total%.3f,"median":$total%.3f,"runs":$runs,"load_avg":$load%.2f,"load_avg_start":$loadStart%.2f,"contended":$contended,"anchor_sec":$anchorSec%.3f,"anchor_mt_sec":$anchorMtSec%.3f,"graph_prep_sec":$graphPrepSec%.3f,"graph_prep_cold_sec":$graphPrepColdSec%.3f,"assign_prep_sec":$assignPrepSec%.3f,"cpus":"$cpus","unit":"sec","queries":$qs,"probes":$probeJson,"errors":${Verify.jsonObject(errors)},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"median":$total%.3f,"runs":$runs,"load_avg":$load%.2f,"load_avg_start":$loadStart%.2f,"contended":$contended,"anchor_sec":$anchorSec%.3f,"anchor_mt_sec":$anchorMtSec%.3f,"graph_prep_sec":$graphPrepSec%.3f,"assign_prep_sec":$assignPrepSec%.3f,"cpus":"$cpus","unit":"sec","queries":$qs,"probes":$probeJson,"errors":${Verify.jsonObject(errors)},"sf":"$sfDir"}"""
     println(line)
     // durability: harness tails can truncate the printed line, losing
     // the early-alphabet per-query times — also land the complete JSON

@@ -1367,7 +1367,7 @@ object GraphOps {
   /** [[louvainLevel]] over a pre-built [[RankedGraph]] — callers that
     * run several community queries on the SAME graph (label
     * propagation, Louvain levels, the fixpoint) build the prep once
-    * (optionally disk-shared across queries via [[rankGraph]]'s `mat`
+    * (optionally shared across queries via [[rankGraph]]'s `mat`
     * hook) and pay only the sweep here. */
   def louvainLevel(g: RankedGraph, rounds: Int): DataFrame =
     louvainDecode(louvainLevelAssign(g, rounds), g.rank, g.hint)
@@ -1377,7 +1377,7 @@ object GraphOps {
     * the full node-sized graph (contracted levels are community-
     * sized), and q210/q212/q246 all run the IDENTICAL level-1 sweep
     * on the same graph. Public so callers can materialize it once
-    * (e.g. [[Materialize.sharedDurable]]) and hand it back via the
+    * (e.g. [[Materialize.shared]]) and hand it back via the
     * assignment-taking [[louvainTwoLevel]]/[[louvainLevels]]
     * overloads; determinism makes the materialized frame
     * bit-identical to a fresh sweep with the same `rounds`. */
@@ -1412,8 +1412,8 @@ object GraphOps {
     *
     * `mat` materializes each named stage ("und"/"rank"/"dir"/"deg").
     * Default is per-call [[Materialize.once]]; pass a
-    * [[Materialize.sharedDurable]]-backed hook to share ONE prep across every
-    * query on the same graph in the session — the r12 verdict measured
+    * [[Materialize.shared]]-backed hook to share ONE prep across every
+    * query on the same graph in the JVM — the r12 verdict measured
     * the per-query re-prep (sort + zipWithIndex + two encode joins) as
     * the dominant constant of the community tier. */
   def rankGraph(edges: DataFrame,
@@ -1583,7 +1583,7 @@ object GraphOps {
 
   /** [[louvainTwoLevel]] starting from a precomputed level-1
     * assignment (the [[louvainLevelAssign]] frame, possibly served
-    * from a durable materialization) — only the contraction and the
+    * from a shared materialization) — only the contraction and the
     * community-sized level-2 sweep run here. */
   def louvainTwoLevel(g: RankedGraph, a1: DataFrame,
       rounds2: Int): DataFrame = {
@@ -1601,13 +1601,11 @@ object GraphOps {
   /** Cheap sanity guard for the assignment-taking overloads: the
     * precomputed frame must carry the (i, label) shape and exactly one
     * row per graph node. Catches the silent-wrong-partition failure of
-    * handing an assignment built from a DIFFERENT graph (or a stale
-    * durable materialization that outlived a node-count change) — the
-    * count is a metadata read on a materialized/parquet-served frame,
-    * so the guard costs milliseconds, not a sweep. It cannot catch a
+    * handing an assignment built from a DIFFERENT graph — the count is
+    * a metadata read on a materialized/parquet-served frame, so the
+    * guard costs milliseconds, not a sweep. It cannot catch a
     * same-sized frame from different roundsPerLevel — that contract
-    * stays documented (and the durable key's algorithm-version
-    * component owns code-change staleness). */
+    * stays documented. */
   private def checkAssignment(g: RankedGraph, a: DataFrame): Unit = {
     val cols = a.columns.toSet
     require(cols.contains("i") && cols.contains("label"),

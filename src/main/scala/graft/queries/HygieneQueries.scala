@@ -306,22 +306,16 @@ object HygieneQueries {
       .orderBy("doc_id", "chunk_idx")
 
   /** Build-once state for q226: the persistent CDC chunk store over
-    * q224's planted corpus, once per (JVM, sf dir) — the q118/q31
+    * q224's planted corpus, once per (JVM, sf dir) through
+    * [[graft.operators.Materialize.buildOnce]] — the q118/q31
     * resident-index pattern. */
   private[graft] object CdcIndexCache {
     val NBuckets = 32
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def getOrBuild(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val base = sys.props.getOrElse("graft.cdcidx.dir",
-          s"${sys.props("java.io.tmpdir")}/graft-cdcidx")
-        val path = s"$base/$tag"
+      graft.operators.Materialize.buildOnce("cdcidx", sfDir) { path =>
         graft.operators.CdcIndex.build(cdcDocs(s, sfDir), "doc_id", "text",
           path, nBuckets = NBuckets)
-        path
-      })
+      }._1
   }
 
   /** The q224 sharing report served FROM the persistent chunk store:

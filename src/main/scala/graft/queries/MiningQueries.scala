@@ -133,7 +133,7 @@ object MiningQueries {
     * [[graft.operators.GraphOps.modularity]]. */
   val q180Modularity: Q = (s, d) => {
     val sp = WarehouseQueries.spPairs(s, d)
-    // the q128 assignment it audits, served from the shared durable
+    // the q128 assignment it audits, served from the shared
     // materialization (WarehouseQueries.spLpa3) instead of re-running
     // the full 3-round propagation — the oracle still recomputes the
     // propagation from scratch, so the equivalence stays pinned
@@ -483,20 +483,16 @@ object MiningQueries {
 
   /** Export-once state for q198 (the q31 holder pattern): the
     * documents corpus lands as WebDataset tar shards once per
-    * (JVM, sf dir); every run re-READS the shard bytes. */
+    * (JVM, sf dir) through [[graft.operators.Materialize.buildOnce]];
+    * every run re-READS the shard bytes. */
   private object TarState {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def getOrExport(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val path = s"${sys.props("java.io.tmpdir")}/graft-tar/$tag"
+      graft.operators.Materialize.buildOnce("tar", sfDir) { path =>
         graft.operators.TarShards.exportTar(
           t(s, sfDir, "documents")
             .select(col("doc_id"), col("text").cast("binary").as("content")),
           path, "doc_id", "content", "txt", TarNShards)
-        path
-      })
+      }._1
   }
 
   /** WebDataset tar-shard export audit: the corpus lands as

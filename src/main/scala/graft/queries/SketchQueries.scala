@@ -163,24 +163,18 @@ object SketchQueries {
 
   /** Build-once state for q87 (the q31 index pattern): lineitem
     * Z-order-clustered on (ship time, price) and written with
-    * file-level min/max stats, once per (JVM, sf dir). */
+    * file-level min/max stats, once per (JVM, sf dir) through
+    * [[graft.operators.Materialize.buildOnce]]. */
   private[graft] object SkipTable {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def getOrBuild(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val base = sys.props.getOrElse("graft.skip.dir",
-          s"${sys.props("java.io.tmpdir")}/graft-skip")
-        val path = s"$base/$tag"
+      graft.operators.Materialize.buildOnce("skip", sfDir) { path =>
         val clustered = graft.operators.ZOrder.cluster(Tables(s, sfDir, "lineitem"),
           Seq((unix_timestamp(col("l_shipdate")).cast("double"), 6.94224e8, 9.151488e8),
             (col("l_extendedprice"), HistLo, HistHi)),
           bits = 8, numPartitions = 32)
         graft.sources.DataSkipping.writeWithStats(clustered, path,
           Seq("l_shipdate", "l_extendedprice"))
-        path
-      })
+      }._1
   }
 
   /** Data-skipping scan end-to-end: a revenue aggregate over a

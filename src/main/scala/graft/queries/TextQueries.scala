@@ -255,24 +255,16 @@ object TextQueries {
     3 -> "slow query small table",
     4 -> "the big row value")
 
-  /** Build-once persistent inverted index per sf dir (the q31 IVF
-    * pattern): postings partitioned by term-hash bucket + stats
-    * sidecar, under the JVM temp dir unless -Dgraft.bm25.dir says
-    * otherwise. */
+  /** Build-once persistent inverted index per (JVM, sf dir) through
+    * [[graft.operators.Materialize.buildOnce]] (the q31 IVF pattern):
+    * postings partitioned by term-hash bucket + stats sidecar. */
   private[queries] object Bm25IndexCache {
     val NBuckets = 64
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def getOrBuild(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val base = sys.props.getOrElse("graft.bm25.dir",
-          s"${sys.props("java.io.tmpdir")}/graft-bm25")
-        val path = s"$base/$tag"
+      graft.operators.Materialize.buildOnce("bm25", sfDir) { path =>
         graft.operators.Bm25Index.build(docs(s, sfDir), "doc_id", "text",
           path, nBuckets = NBuckets)
-        path
-      })
+      }._1
   }
 
   /** BM25 through the persistent inverted index: the probe prunes to

@@ -69,8 +69,9 @@ object VectorQueries {
   }
 
   /** Persistent-index state for q31: the index is built ONCE per (JVM,
-    * sf dir) — repeated bench passes and the verify run all probe the
-    * same on-disk index, the shape a real user runs. The fitted
+    * sf dir) through [[graft.operators.Materialize.buildOnce]] —
+    * repeated bench passes and the verify run all probe the same
+    * on-disk index, the shape a real user runs. The fitted
     * quantized centroids are held so [[oracles]] can render them as
     * BIGINT[] literals in the DuckDB oracle (training isn't
     * SQL-expressible; replaying the FITTED quantizer is — Verify runs
@@ -79,26 +80,16 @@ object VectorQueries {
   private[queries] object IvfIndex {
     val NCells = 16
     val NProbe = 4
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Array[Long]])]()
     @volatile private[queries] var lastCentroids: Option[Array[Array[Long]]] = None
 
     def getOrBuild(s: SparkSession, sfDir: String): String = {
-      val entry = cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        // location override via -Dgraft.ivf.dir; default to the JVM
-        // temp dir — no assumption about checkout location/writability
-        val base = sys.props.getOrElse("graft.ivf.dir",
-          s"${sys.props("java.io.tmpdir")}/graft-ivf")
-        val path = s"$base/$tag"
-        val cents = Similarity.buildIvfIndexQuantized(
-          Tables(s, sfDir, "embeddings"), "vec_id", "embedding", path,
+      val (path, cents) = graft.operators.Materialize.buildOnce("ivf", sfDir) { dir =>
+        Similarity.buildIvfIndexQuantized(
+          Tables(s, sfDir, "embeddings"), "vec_id", "embedding", dir,
           nCells = NCells, seed = 42L)
-        (path, cents)
-      })
-      lastCentroids = Some(entry._2)
-      entry._1
+      }
+      lastCentroids = Some(cents)
+      path
     }
   }
 
@@ -112,28 +103,20 @@ object VectorQueries {
     val NCells = 16
     val NProbe = 4
     val MaxCellFraction = 0.10
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Array[Long]])]()
     @volatile private[queries] var lastCentroids: Option[Array[Array[Long]]] = None
 
     def getOrBuild(s: SparkSession, sfDir: String): String = {
-      val entry = cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val base = sys.props.getOrElse("graft.ivf.dir",
-          s"${sys.props("java.io.tmpdir")}/graft-ivf")
-        val path = s"$base/$tag-bal"
+      val (path, cents) = graft.operators.Materialize.buildOnce("ivf-bal", sfDir) { dir =>
         val corpus = Tables(s, sfDir, "embeddings")
         val balanced = Similarity.fitBalancedQuantizedCentroids(corpus,
           "embedding", nCells = NCells, seed = 42L,
           maxCellFraction = MaxCellFraction)
-        val cents = Similarity.buildIvfIndexQuantized(corpus, "vec_id",
-          "embedding", path, nCells = NCells, seed = 42L,
+        Similarity.buildIvfIndexQuantized(corpus, "vec_id",
+          "embedding", dir, nCells = NCells, seed = 42L,
           preFitted = Some(balanced))
-        (path, cents)
-      })
-      lastCentroids = Some(entry._2)
-      entry._1
+      }
+      lastCentroids = Some(cents)
+      path
     }
   }
 
@@ -871,26 +854,19 @@ object VectorQueries {
   }
 
   /** Build-once persistent SRP layout for the ANN-MaxSim stage 1 per
-    * sf dir (the q118/q31 pattern): pooled doc vectors partitioned by
-    * (t, bucket) + parameter-pinning meta, under the JVM temp dir
-    * unless -Dgraft.maxsimsrp.dir says otherwise. Parameters match
-    * q253's scan path so q254 can assert indexed ≡ scan. */
+    * (JVM, sf dir) through [[graft.operators.Materialize.buildOnce]]
+    * (the q118/q31 pattern): pooled doc vectors partitioned by
+    * (t, bucket) + parameter-pinning meta. Parameters match q253's
+    * scan path so q254 can assert indexed ≡ scan. */
   private[queries] object MaxSimSrpIndexCache {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def getOrBuild(s: SparkSession, sfDir: String): String =
-      cache.computeIfAbsent(sfDir, { _ =>
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val base = sys.props.getOrElse("graft.maxsimsrp.dir",
-          s"${sys.props("java.io.tmpdir")}/graft-maxsimsrp")
-        val path = s"$base/$tag"
+      graft.operators.Materialize.buildOnce("maxsimsrp", sfDir) { path =>
         val toks = emb(s, sfDir)
           .select(expr("vec_id div 8").cast("long").as("doc_id"),
             col("vec_id").as("tok_id"), quantize(col("embedding")).as("qv"))
         Similarity.buildMaxSimSrpIndex(toks, path,
           planes = 4, tables = 4, dims = 64)
-        path
-      })
+      }._1
   }
 
   /** q253 through the persistent bucket-partitioned SRP index: stage 1

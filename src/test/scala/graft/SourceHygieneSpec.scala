@@ -20,6 +20,10 @@ import scala.jdk.CollectionConverters._
   * name from an entry point, so library code that nothing runs cannot
   * accumulate unseen.
   *
+  * Temp-dir gate: only `Materialize` and the three warehouse-dir
+  * defaults name `java.io.tmpdir`, so shared builds keep one on-disk
+  * layout, behind one module.
+  *
   * Benchmark pin: the traced ETL benchmark copies `Orchestrator.runDaily`
   * and refuses to run when its source no longer hashes to the digest
   * pinned in perfbench/harness/EtlBench.scala; checked here so the drift
@@ -95,6 +99,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(allowed.keySet.subsetOf(unreached),
       "allow-listed files that are now reached or gone (drop them from " +
         "the list): " + (allowed.keySet -- unreached).mkString(", "))
+  }
+
+  test("only Materialize and the warehouse defaults name java.io.tmpdir") {
+    // the on-disk layout of shared builds stays behind one module
+    val main = Paths.get("src/main/scala")
+    val warehouseSites =
+      Set("graft/GraftSession.scala", "graft/Bench.scala", "graft/Verify.scala")
+    val offenders = scalaFiles(main).flatMap { p =>
+      val f = main.relativize(p).toString
+      val t = stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+      val named = "java\\.io\\.tmpdir".r.findAllMatchIn(t).count { m =>
+        !(warehouseSites(f) && t.startsWith("\")}/graft-warehouse", m.end))
+      }
+      if (named == 0 || f == "graft/operators/Materialize.scala") None
+      else Some(s"$f: $named")
+    }
+    assert(offenders.isEmpty,
+      "java.io.tmpdir named outside Materialize (build under " +
+        "Materialize.buildOnce instead):\n" + offenders.mkString("\n"))
   }
 
   test("Orchestrator.runDaily still hashes to the benchmark's pinned digest") {
