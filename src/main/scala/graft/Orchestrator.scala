@@ -25,7 +25,7 @@ object Orchestrator {
       Try(f) match {
         case Success(v) => return v
         case Failure(e) =>
-          log(s"[$jobName] attempt $i failed: ${e.getMessage}")
+          log(s"[$jobName] attempt $i failed: ${Verify.failureReason(e)}")
           last = e
       }
       i += 1
@@ -96,9 +96,35 @@ object Orchestrator {
   * action is already cluster-parallel inside); SparkSession is
   * thread-safe so the reference's connection-per-call dance
   * (daily_scheduler.py:23) has no equivalent here.
+  *
+  * Every Spark call of the daily run goes through [[spark]], a session
+  * of the run's own, derived once from the caller's with `newSession()`
+  * (same context, cache and builder settings), that runs interpreted:
+  * `spark.sql.codegen.wholeStage=false` and
+  * `spark.sql.codegen.factoryMode=NO_CODEGEN`. Compiling generated code
+  * pays off on large inputs (Spark SQL, SIGMOD 2015); a daily batch is
+  * 10²–10⁴ rows, and a day plans about 200 distinct generated classes
+  * (whole-stage iterators, projections, orderings, column accessors)
+  * against a codegen cache of 100 (`spark.sql.codegen.cache.maxEntries`,
+  * static), so a compiled run recompiled all of them every day: 182
+  * classes in the `etl_delta` benchmark's backfill, 199 and 200 on its
+  * two delta days, 4.1 s of Janino per 9.5–10.5 s day. Interpreted, the
+  * same days compile 17, 2 and 0 (only paths without an interpreted
+  * twin, such as the cached-batch column accessors). `factoryMode` is an
+  * internal key: its effect is pinned by OrchestratorSpec against the
+  * Spark version `build.sbt` fixes. The caller's session is never
+  * changed; [[goldTable]], a consumer reader, reads through it.
   */
-final class Orchestrator(spark: SparkSession, bronzeDir: String,
+final class Orchestrator(caller: SparkSession, bronzeDir: String,
                          silverDir: String, goldDir: String, stateDir: String) {
+
+  /** The daily run's own interpreted session (see the class doc). */
+  private[graft] val spark: SparkSession = {
+    val s = caller.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
 
   val runLog = new EtlRunLog.Store(spark, s"$stateDir/etl_run_log")
   private val stores = Seq("retail" -> "R-", "wholesale" -> "W-")
@@ -130,7 +156,7 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
       case Success(wm) =>
         runLog.logStagingSuccess(runId, wm, LocalDateTime.now()); wm
       case Failure(e) =>
-        runLog.logFailure(runId, e.getMessage, LocalDateTime.now()); throw e
+        runLog.logFailure(runId, Verify.failureReason(e), LocalDateTime.now()); throw e
     }
   }
 
@@ -142,12 +168,13 @@ final class Orchestrator(spark: SparkSession, bronzeDir: String,
   private def silver(store: String, table: String): Option[DataFrame] =
     AtomicTableWriter.read(spark, silverPath(store, table), silverSchemas(table))
 
-  /** Gold-table reader for consumers: hides internal layout columns
-    * (the hash `bucket` partition column on bucketed fact tables). */
+  /** Gold-table reader for consumers, in the caller's session: hides
+    * internal layout columns (the hash `bucket` partition column on
+    * bucketed fact tables). */
   def goldTable(table: String): Option[DataFrame] = {
     val path = new Path(goldPath(table))
-    Option.when(path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))(
-      spark.read.parquet(path.toString).drop("bucket"))
+    Option.when(path.getFileSystem(caller.sparkContext.hadoopConfiguration).exists(path))(
+      caller.read.parquet(path.toString).drop("bucket"))
   }
 
   /** R∪W staging view; degenerates to one side when the other is absent

@@ -103,7 +103,7 @@ object Fixtures {
     s"""[${nodes.mkString(",")}]""" // edges without node wrapper
 
   def writeTemp(content: String, name: String): String = {
-    val dir: Path = Files.createTempDirectory("graft-fixture")
+    val dir: Path = SparkSpec.tempDir("graft-fixture")
     val f = dir.resolve(name)
     Files.writeString(f, content)
     f.toString

@@ -40,7 +40,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("daily run end-to-end: all gold tables materialize correctly") {
-    val root = Files.createTempDirectory("graft-e2e").toString
+    val root = SparkSpec.tempDir("graft-e2e").toString
     setupBronze(root)
     val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
       s"$root/gold", s"$root/state")
@@ -90,7 +90,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("atomic writer: overwrite swaps without losing the table") {
-    val path = Files.createTempDirectory("graft-atomic").toString + "/t"
+    val path = SparkSpec.tempDir("graft-atomic").toString + "/t"
     AtomicTableWriter.overwrite(Seq(1, 2, 3).toDF("x"), path)
     assert(spark.read.parquet(path).count() == 3)
     AtomicTableWriter.overwrite(Seq(4, 5).toDF("x"), path)
@@ -112,7 +112,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("staging parses the bronze batch once and leaves nothing persisted") {
-    val root = Files.createTempDirectory("graft-stage-once").toString
+    val root = SparkSpec.tempDir("graft-stage-once").toString
     setupBronze(root)
     val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
       s"$root/gold", s"$root/state")
@@ -129,8 +129,72 @@ class OrchestratorSpec extends SparkSpec {
     Files.writeString(Paths.get(root, "not-a-dir"), "")
     val broken = new Orchestrator(spark, s"$root/bronze", s"$root/not-a-dir",
       s"$root/gold", s"$root/state2")
-    intercept[Exception](broken.stageEntity("retail", "R-", "products"))
+    val e = intercept[Exception](broken.stageEntity("retail", "R-", "products"))
     assert(spark.sharedState.cacheManager.isEmpty)
+    // the FAILED row carries the reason, `<Class>: <first line>`
+    val notes = broken.runLog.all().filter(col("status") === "FAILED")
+      .select("notes").as[String].collect().toSeq
+    assert(notes.size == 1 && notes.head != null &&
+      notes.head.startsWith(e.getClass.getName), notes)
+  }
+
+  test("the daily run is interpreted: a second day compiles at most one generated class") {
+    val CodegenKeys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val root = SparkSpec.tempDir("graft-interpreted").toString
+    setupBronze(root)
+    val callerKeys = CodegenKeys.map(spark.conf.get)
+    assert(callerKeys == Seq("true", "FALLBACK"))
+    val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
+      s"$root/gold", s"$root/state")
+    assert(orch.spark ne spark)
+    assert(CodegenKeys.map(orch.spark.conf.get) == Seq("false", "NO_CODEGEN"))
+    // the run's session keeps the caller's builder settings
+    for (k <- Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions"))
+      assert(orch.spark.conf.get(k) == spark.conf.get(k), k)
+
+    assert(orch.runDaily())
+    // compiled, the second day recompiles its classes: a day plans more
+    // distinct classes than the codegen cache holds
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    assert(orch.runDaily())
+    val secondDay = compiles.getCount - before
+    // the one class left is codegen-only: the column accessor that reads
+    // W7's persisted (sku, snapshot_date) keys back from the cache, which
+    // the second day is the first to merge into an existing table
+    assert(secondDay <= 1, s"the second day compiled $secondDay classes")
+
+    assert(CodegenKeys.map(spark.conf.get) == callerKeys) // caller untouched
+    assert(orch.goldTable("fact_orders").get.sparkSession eq spark)
+  }
+
+  test("bucketOf homes every key to the same bucket interpreted and compiled") {
+    // gold tables written compiled must keep their layout when merged
+    // interpreted: a key re-homed to another bucket duplicates its row
+    val root = SparkSpec.tempDir("graft-bucket-layout").toString
+    val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
+      s"$root/gold", s"$root/state")
+    val rnd = new scala.util.Random(42)
+    def sku() = Seq.fill(3 + rnd.nextInt(6))(
+      "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789-_ ".charAt(rnd.nextInt(39))).mkString
+    val fixture = Seq("R-5551234", "R-5551235", "W-7771", "WID-001", "wid-001")
+    val keys = fixture ++ Seq(null, "", " ", "  ") ++
+      Seq.fill(2000)(s"${if (rnd.nextBoolean()) "R" else "W"}-${rnd.nextInt(Int.MaxValue)}") ++
+      Seq.fill(2000)(sku())
+    keys.toDF("k").write.parquet(s"$root/keys")
+    def buckets(s: org.apache.spark.sql.SparkSession) = {
+      val df = s.read.parquet(s"$root/keys").select(col("k"), PartitionedMerge.bucketOf("k", 32))
+      val rows = df.as[(Option[String], Int)].collect().toSeq.sorted
+      val compiled = df.queryExecution.executedPlan
+        .exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+      (compiled, rows)
+    }
+    val (callerCompiled, compiled) = buckets(spark)
+    val (etlCompiled, interpreted) = buckets(orch.spark)
+    assert(callerCompiled && !etlCompiled)
+    assert(interpreted.size == keys.size)
+    assert(interpreted == compiled)
+    assert(interpreted.contains(None -> 10)) // hash(null) is the seed, 42
   }
 
   /** Day 2's wholesale bronze: order W-7771 updated to a total of 400. */
@@ -148,7 +212,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("bucketed fact merges rewrite only the touched hash buckets") {
-    val root = Files.createTempDirectory("graft-bucketed").toString
+    val root = SparkSpec.tempDir("graft-bucketed").toString
     setupBronze(root)
     val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
       s"$root/gold", s"$root/state")
@@ -169,7 +233,7 @@ class OrchestratorSpec extends SparkSpec {
 
   test("side-by-side merges: a failed branch surfaces after its sibling commits, a rerun converges") {
     def dayTwo(name: String): (String, Orchestrator) = {
-      val root = Files.createTempDirectory(name).toString
+      val root = SparkSpec.tempDir(name).toString
       setupBronze(root)
       val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
         s"$root/gold", s"$root/state")
@@ -205,7 +269,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("W7 rewrites only today's snapshot partition; earlier days keep their files") {
-    val root = Files.createTempDirectory("graft-snapshot").toString
+    val root = SparkSpec.tempDir("graft-snapshot").toString
     setupBronze(root)
     val orch = new Orchestrator(spark, s"$root/bronze", s"$root/silver",
       s"$root/gold", s"$root/state")
@@ -231,7 +295,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("two versions of one order across bronze files collapse to the latest") {
-    val root = Files.createTempDirectory("graft-dup").toString
+    val root = SparkSpec.tempDir("graft-dup").toString
     def write(rel: String, content: String): Unit = {
       val p = java.nio.file.Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -270,10 +334,17 @@ class OrchestratorSpec extends SparkSpec {
       Orchestrator.withRetries("bad", attempts = 2, _ => ())(
         throw new RuntimeException("always"))
     }
+    // a failure without a message still logs its class
+    val quiet = scala.collection.mutable.Buffer[String]()
+    intercept[IllegalStateException] {
+      Orchestrator.withRetries("quiet", attempts = 2, quiet += _)(
+        throw new IllegalStateException())
+    }
+    assert(quiet.contains("[quiet] attempt 1 failed: java.lang.IllegalStateException"), quiet)
   }
 
   test("S10 archive + delete lifecycle") {
-    val dir = Files.createTempDirectory("arch")
+    val dir = SparkSpec.tempDir("arch")
     val f = dir.resolve("raw.json")
     Files.writeString(f, "{}")
     Orchestrator.archiveAndDelete(f.toString, Some(dir.resolve("archive").toString))
@@ -286,7 +357,7 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("run log: watermark resolution with lookback") {
-    val root = Files.createTempDirectory("graft-runlog").toString
+    val root = SparkSpec.tempDir("graft-runlog").toString
     val log = new graft.state.EtlRunLog.Store(spark, s"$root/etl_run_log")
     val today = java.time.LocalDate.parse("2025-12-08")
     // no history → 3-day default lookback

@@ -24,6 +24,10 @@ import scala.jdk.CollectionConverters._
   * defaults name `java.io.tmpdir`, so shared builds keep one on-disk
   * layout, behind one module.
   *
+  * Test temp-dir gate: specs make scratch directories only through
+  * `SparkSpec.tempDir`, which puts them under one per-JVM root that is
+  * deleted when the JVM exits, so a test run leaves nothing in /tmp.
+  *
   * Benchmark pin: the traced ETL benchmark copies `Orchestrator.runDaily`
   * and refuses to run when its source no longer hashes to the digest
   * pinned in perfbench/harness/EtlBench.scala; checked here so the drift
@@ -118,6 +122,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "java.io.tmpdir named outside Materialize (build under " +
         "Materialize.buildOnce instead):\n" + offenders.mkString("\n"))
+  }
+
+  test("specs create temp directories only through SparkSpec.tempDir") {
+    // one per-JVM root, deleted at exit: nothing piles up under /tmp
+    val test = Paths.get("src/test/scala")
+    val offenders = scalaFiles(test).flatMap { p =>
+      val f = test.relativize(p).toString
+      val t = stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+      val named = """\bcreateTempDirectory\s*\(""".r.findAllMatchIn(t).size
+      val allowed = if (f == "graft/SparkSpec.scala") 1 else 0
+      if (named <= allowed) None else Some(s"$f: $named")
+    }
+    assert(offenders.isEmpty,
+      "createTempDirectory outside SparkSpec.tempDir (call SparkSpec.tempDir " +
+        "instead):\n" + offenders.mkString("\n"))
   }
 
   test("Orchestrator.runDaily still hashes to the benchmark's pinned digest") {

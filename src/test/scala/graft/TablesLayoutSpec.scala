@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,7 +15,7 @@ class TablesLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-layout").toString
+    SparkSpec.tempDir("graft-layout").toString
 
   // one true instant: 2024-01-15T06:30:00 UTC
   private val micros = 1705300200000000L

@@ -64,7 +64,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("Bm25Index: search returns exactly what the scan path returns") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = SparkSpec.tempDir("bm25idx").toString
     Bm25Index.build(docs, "id", "text", dir, nBuckets = 8)
     val qs = Seq(1 -> "hash join", 2 -> "table spark", 3 -> "zzz-missing")
     val scan = Bm25.topK(docs, "id", "text", qs, k = 3)
@@ -75,7 +75,7 @@ class Bm25Spec extends SparkSpec {
   }
 
   test("Bm25Index: probe prunes to the query terms' bucket partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx2").toString
+    val dir = SparkSpec.tempDir("bm25idx2").toString
     Bm25Index.build(docs, "id", "text", dir, nBuckets = 8)
     val out = Bm25Index.search(spark, dir, Seq(1 -> "hash"), k = 3)
     val p = out.queryExecution.executedPlan.toString

@@ -69,7 +69,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("CdcIndex: sharing served from the store == direct chunkDedup; probe prunes") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cdcidx").toString
+    val root = SparkSpec.tempDir("graft-cdcidx").toString
     val rng = new scala.util.Random(21)
     val tail =
       "shared storage tail that should dedup across documents fully " * 3

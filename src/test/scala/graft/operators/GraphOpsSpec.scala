@@ -734,7 +734,7 @@ class GraphOpsSpec extends SparkSpec {
     val g = GraphOps.rankGraph(edges)
     def labelsOf(df: org.apache.spark.sql.DataFrame) =
       df.select("node_id", "label").as[(String, String)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("l1").resolve("a1")
+    val dir = SparkSpec.tempDir("l1").resolve("a1")
     GraphOps.louvainLevelAssign(g, rounds = 2)
       .write.mode("overwrite").parquet(dir.toString)
     val l1 = spark.read.parquet(dir.toString)

@@ -44,7 +44,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("the index survives a parquet round-trip with identical verdicts") {
-    val dir = java.nio.file.Files.createTempDirectory("idx").toString
+    val dir = SparkSpec.tempDir("idx").toString
     index.write.mode("overwrite").parquet(dir)
     val reread = spark.read.parquet(dir)
     val batch = Seq(

@@ -27,7 +27,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("upsert rewrites only partitions containing staged keys") {
-    val root = Files.createTempDirectory("pmerge").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge").toString + "/t"
     mkTable(root)
     val before02 = partFiles(root, "2025-01-02")
     val before03 = partFiles(root, "2025-01-03")
@@ -48,7 +48,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("the staged batch is computed once, each touched partition gets one file, the batch is released") {
-    val root = Files.createTempDirectory("pmerge-once").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge-once").toString + "/t"
     mkTable(root)
     val before03 = partFiles(root, "2025-01-03")
     spark.catalog.clearCache()
@@ -76,7 +76,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("deleteReload prunes the same way") {
-    val root = Files.createTempDirectory("pmerge2").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge2").toString + "/t"
     mkTable(root)
     val before01 = partFiles(root, "2025-01-01")
     val staged = Seq(("k3", "2025-01-02", 33.0)).toDF("k", "day", "v")
@@ -89,7 +89,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("hash-bucket partitioning gives keys with no natural partition a pruned path") {
-    val root = Files.createTempDirectory("pmerge3").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge3").toString + "/t"
     val n = 8
     val init = (1 to 100).map(i => (s"k$i", i.toDouble)).toDF("k", "v")
       .withColumn("bucket", PartitionedMerge.bucketOf("k", n))
@@ -104,7 +104,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("bucketedUpsert pins the bucket count; a different count fails fast") {
-    val root = Files.createTempDirectory("pmerge5").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge5").toString + "/t"
     val init = (1 to 50).map(i => (s"k$i", i.toDouble)).toDF("k", "v")
     PartitionedMerge.bucketedUpsert(spark, root, init, Seq("k"), nBuckets = 8)
     assert(PartitionedMerge.readBucketCount(spark, root).contains(8))
@@ -124,7 +124,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("sidecar-less bucketed table is refused until pinBucketCount") {
-    val root = Files.createTempDirectory("pmerge6").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge6").toString + "/t"
     val init = (1 to 50).map(i => (s"k$i", i.toDouble)).toDF("k", "v")
       .withColumn("bucket", PartitionedMerge.bucketOf("k", 8))
     // simulate a pre-sidecar table (raw upsert, no metadata)
@@ -152,7 +152,7 @@ class PartitionedMergeSpec extends SparkSpec {
     // crash can leave a SUBSET of touched partitions replaced (the
     // documented durability gap). The recovery contract: rerun the
     // merge with the same staged batch -> every partition converges.
-    val root = Files.createTempDirectory("pmerge-crash").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge-crash").toString + "/t"
     mkTable(root)
     val staged = Seq(("k2", "2025-01-01", 20.0), ("k3", "2025-01-02", 30.0))
       .toDF("k", "day", "v")
@@ -173,7 +173,7 @@ class PartitionedMergeSpec extends SparkSpec {
   }
 
   test("pruned scan plan shows partition filters, not a full read") {
-    val root = Files.createTempDirectory("pmerge4").toString + "/t"
+    val root = SparkSpec.tempDir("pmerge4").toString + "/t"
     mkTable(root)
     val pruned = spark.read.parquet(root)
       .filter($"day".cast("string").isin("2025-01-01"))

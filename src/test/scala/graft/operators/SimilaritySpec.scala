@@ -162,7 +162,7 @@ class SimilaritySpec extends SparkSpec {
     val df = toks.toDF("doc_id", "tok_id", "qv")
     val q = df.filter(col("doc_id") < 2)
       .select(col("doc_id").as("query_id"), col("tok_id"), col("qv"))
-    val dir = java.nio.file.Files.createTempDirectory("maxsimsrpidx").toString
+    val dir = SparkSpec.tempDir("maxsimsrpidx").toString
     Similarity.buildMaxSimSrpIndex(df, dir, planes = 2, tables = 3, dims = dims)
     val probed = Similarity.maxSimSrpProbe(df, q, dir, kCand = 8, k = 3,
       excludeSelfDoc = true)
@@ -332,7 +332,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("buildIvfIndex + ivfProbe: prunes partitions, matches ivfTopK") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
+    val dir = SparkSpec.tempDir("ivf").toString
     val queries = vecs.filter($"id" < 10)
     Similarity.buildIvfIndex(vecs, "id", "vec", dir, nCells = 8)
     assert(new java.io.File(s"$dir/data").listFiles()
@@ -346,7 +346,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("buildIvfIndexQuantized + ivfProbeQuantized: pruned scan, exact integer ranking") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfq").toString
+    val dir = SparkSpec.tempDir("ivfq").toString
     val queries = vecs.filter($"id" < 10)
     val cents = Similarity.buildIvfIndexQuantized(vecs, "id", "vec", dir, nCells = 8)
     assert(cents.length == 8 && cents.forall(_.length == 16))
@@ -384,7 +384,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("buildSrpIndex + srpProbe: pruned scan, identical to the direct path") {
-    val dir = java.nio.file.Files.createTempDirectory("srpidx").toString
+    val dir = SparkSpec.tempDir("srpidx").toString
     val queries = vecs.filter($"id" < 10)
     Similarity.buildSrpIndex(vecs, "id", "vec", dir, planes = 4, tables = 2, dims = 16)
     val probed = Similarity.srpProbe(queries, dir, "id", "vec", k = 5)

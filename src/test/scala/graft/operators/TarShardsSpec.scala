@@ -7,7 +7,7 @@ class TarShardsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-tar").toString
+    SparkSpec.tempDir("graft-tar").toString
 
   private val docs = Seq(
     (1L, "alpha body"), (2L, "beta"), (3L, "gamma content here"),

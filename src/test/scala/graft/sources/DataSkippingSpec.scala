@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.DataSkipping.ColRange
@@ -9,7 +8,7 @@ class DataSkippingSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-skip").toString
+    SparkSpec.tempDir("graft-skip").toString
 
   /** 1000 rows, k in [0,1000), clustered into 10 disjoint files. */
   private def writeClustered(path: String): Unit = {

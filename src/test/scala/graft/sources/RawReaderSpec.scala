@@ -39,7 +39,7 @@ class RawReaderSpec extends SparkSpec {
   }
 
   test("one directory mixing shapes: every file's nodes are read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mixed")
+    val dir = SparkSpec.tempDir("graft-mixed")
     java.nio.file.Files.writeString(dir.resolve("a.json"),
       Fixtures.envelope(Seq(Fixtures.customerNode), "retail", "customers"))
     java.nio.file.Files.writeString(dir.resolve("b.json"),

@@ -82,7 +82,7 @@ class ShopifyClientSpec extends SparkSpec {
       Seq(edge(13, "2025-12-03T00:00:00Z"))))
     val c = client(t)
     val edges = c.extractIncremental("q", "orders", Some("2025-11-30"))
-    val dir = java.nio.file.Files.createTempDirectory("bronze").toString
+    val dir = SparkSpec.tempDir("bronze").toString
     c.saveToFile(edges, "retail", "orders", dir, "2025-12-08T05:46:00")
     val nodes = RawReader.readJson(spark, Schemas.orderNode, "orders", dir)
     assert(nodes.count() == 3)

@@ -17,7 +17,7 @@ class EtlRunLogSpec extends SparkSpec {
 
   private val today = LocalDate.parse("2025-12-08")
   private def at(ts: String) = LocalDateTime.parse(ts)
-  private def newPath() = Files.createTempDirectory("graft-runlog").toString + "/etl_run_log"
+  private def newPath() = SparkSpec.tempDir("graft-runlog").toString + "/etl_run_log"
   private def onDisk(store: EtlRunLog.Store): Seq[Run] =
     store.all().as[Run].collect().toSeq.sortBy(r => (r.id, r.ingestedAt))
   private def parts(path: String): Set[String] =
