@@ -1,15 +1,24 @@
 package graft.state
 
+import java.io.IOException
 import java.time.{LocalDate, LocalDateTime}
 import java.time.format.DateTimeFormatter
+import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 
 /** O4/O5 — run-status + watermark state table (`etl_run_log`,
   * daily_scheduler.py:24-83; columns per FIXTURES.md §6).
   *
-  * A small driver-side state table: append-per-event parquet, one part
-  * file per event, latest status resolved by max(id) per run.
+  * A small driver-side state table: one single-row parquet part file per
+  * event, written from the driver without a Spark job; latest status
+  * resolved by max(id) per run.
   */
 object EtlRunLog {
   val ISO: DateTimeFormatter = DateTimeFormatter.ISO_LOCAL_DATE_TIME
@@ -28,9 +37,15 @@ object EtlRunLog {
     *
     * Every call lists the directory and reads, with the known schema,
     * only the part files the index has not seen; another writer's
-    * appends are therefore picked up on the next call. After its own
-    * append the Store adopts the one new part file without reading it
-    * back. A seen file that disappeared makes it reload from scratch.
+    * appends are therefore picked up on the next call. A seen file that
+    * disappeared makes it reload from scratch.
+    *
+    * An append writes its one row with parquet-mr's example writer, in
+    * the Parquet schema Spark's writer gives `Run`, to a `_`-prefixed
+    * temp file that Spark, this index and a `*.parquet` glob all skip,
+    * then renames it to `part-<uuid>.parquet`: an append killed before
+    * the rename leaves no row behind. The Store adopts the renamed file
+    * and its row into the index without listing or reading it back.
     *
     * The index assumes one writer lock per Store: every read and write
     * of this Store is serialized through it. Two Stores on one path see
@@ -40,14 +55,16 @@ object EtlRunLog {
   final class Store(spark: SparkSession, path: String) {
     import spark.implicits._
 
-    /** Parquet appends are not concurrency-safe (shared `_temporary`
-      * staging dir); the reference leaned on Postgres for this. All
-      * writes — and the index they update — are serialized through this
-      * lock; contention is nil for a control-plane table. */
+    /** Id allocation (max + 1) and the index are serialized through
+      * this lock, as the reference leaned on Postgres for them; it is
+      * held for a one-row file write, not for a Spark job. */
     private val writeLock = new Object
     private val dir = new Path(path)
-    private val fs: FileSystem =
-      dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private val hadoopConf = spark.sparkContext.hadoopConfiguration
+    private val fs: FileSystem = dir.getFileSystem(hadoopConf)
+    private val parquetSchema =
+      new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(RunSchema)
+    private val groups = new SimpleGroupFactory(parquetSchema)
 
     /** Part files the index holds, and their rows. Guarded by writeLock. */
     private var seen = Set.empty[String]
@@ -85,16 +102,34 @@ object EtlRunLog {
       if (fs.exists(dir)) spark.read.schema(RunSchema).parquet(path)
       else spark.emptyDataset[Run].toDF()
 
-    /** One-row append; the new part file is adopted without a read when
-      * it is the only one that appeared. Caller holds writeLock and has
-      * just refreshed the index. */
+    /** One row as a Parquet record: each field under its schema name, an
+      * absent value (None, null) left unset. */
+    private def group(run: Run): Group = {
+      val g = groups.newGroup()
+      run.productIterator.zip(RunSchema.fieldNames).foreach {
+        case (v: Long, f) => g.append(f, v)
+        case (v: Boolean, f) => g.append(f, v)
+        case (v: String, f) => g.append(f, v)
+        case (Some(v: String), f) => g.append(f, v)
+        case (None | null, _) =>
+      }
+      g
+    }
+
+    /** One-row append without a Spark job: write a temp file, rename it
+      * into place, adopt it. Caller holds writeLock and has just
+      * refreshed the index. */
     private def append(run: Run): Unit = {
-      Seq(run).toDF().coalesce(1).write.mode("append").parquet(path)
-      val onDisk = partFiles()
-      if (seen.subsetOf(onDisk) && onDisk.size == seen.size + 1) {
-        rows :+= run
-        seen = onDisk
-      } else refresh()
+      val uuid = UUID.randomUUID()
+      val tmp = new Path(dir, s"_append-$uuid")
+      val part = new Path(dir, s"part-$uuid.parquet")
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, hadoopConf))
+        .withConf(hadoopConf).withType(parquetSchema)
+        .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      try writer.write(group(run)) finally writer.close()
+      if (!fs.rename(tmp, part)) throw new IOException(s"could not rename $tmp to $part")
+      rows :+= run
+      seen += fs.makeQualified(part).toString
     }
 
     /** Insert a RUNNING row, returning its id (daily_scheduler.py:24-36). */
