@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Uses the same tuned
-  * session config as the library (AQE, 32 shuffle partitions). Each
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Starts its session from
+  * `GraftSession.builder`, like `Verify` and the specs. Each
   * query is forced with a count() action; times include plan + execute
   * but share one warm session/JVM.
   *
@@ -54,17 +52,7 @@ object Bench {
     val contendedThreshold = sys.env
       .getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "3.0").toDouble
     val contended = loadStart > contendedThreshold
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // machine-speed anchor: a fixed CPU-bound workload timed before the

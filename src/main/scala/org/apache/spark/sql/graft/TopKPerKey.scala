@@ -143,8 +143,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
 }
 
 /** Plans [[TopKPerKeyPlan]] as partial → (Exchange via
-  * EnsureRequirements) → final. Injected by `graft.GraftExtensions`
-  * (`injectPlannerStrategy`) or post-hoc via
+  * EnsureRequirements) → final. Installed on first use through
   * `experimental.extraStrategies` ([[TopKPerKey.ensureStrategy]]). */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -157,8 +156,8 @@ object TopKPerKeyStrategy extends SparkStrategy {
 }
 
 object TopKPerKey {
-  /** Register the strategy on a session that was not built with
-    * `spark.sql.extensions=graft.GraftExtensions`. Idempotent. */
+  /** Register the strategy on the session; [[apply]] calls this, so
+    * any session plans the node. Idempotent. */
   def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
     val s = spark.asInstanceOf[classic.SparkSession]
     if (!s.experimental.extraStrategies.contains(TopKPerKeyStrategy))
@@ -174,8 +173,13 @@ object TopKPerKey {
     require(keyCols.nonEmpty, "need at least one key column")
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     ensureStrategy(session)
-    val keys = keyCols.map(GraftFunctionBridge.toExpression)
-    val order = orderCols.map(c => GraftFunctionBridge.toExpression(c) match {
+    // eager conversion: `ExpressionUtils.expression` would only wrap the
+    // node lazily, hiding the SortOrder that `col.desc` carries from the
+    // match below; the converter yields the real tree, which the analyzer
+    // resolves against the child as usual
+    def toExpression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
+    val keys = keyCols.map(toExpression)
+    val order = orderCols.map(c => toExpression(c) match {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)
     })

@@ -52,7 +52,8 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = GraftSession.get()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans of the headline queries\n\n")

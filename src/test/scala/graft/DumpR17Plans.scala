@@ -14,7 +14,8 @@ object DumpR17Plans {
       if (args.length > 2) args(2).split(",").toSeq
       else sys.env.get("R17_PLANS").map(_.split(",").toSeq).getOrElse(Seq.empty)
     require(names.nonEmpty, "pass query names as arg 3 or R17_PLANS env")
-    val spark = GraftSession.get()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = java.nio.file.Paths.get("plans/r17")
     java.nio.file.Files.createDirectories(outDir)

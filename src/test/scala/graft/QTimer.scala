@@ -7,7 +7,8 @@ object QTimer {
     val name = a(0)
     val dir = if (a.length > 1) a(1) else "/root/testdata/sf0.1"
     val passes = if (a.length > 2) a(2).toInt else 3
-    val s = GraftSession.get()
+    val s = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     for (i <- 1 to passes) {
       val t0 = System.nanoTime()

@@ -20,9 +20,14 @@ import scala.jdk.CollectionConverters._
   * name from an entry point, so library code that nothing runs cannot
   * accumulate unseen.
   *
-  * Temp-dir gate: only `Materialize` and the three warehouse-dir
-  * defaults name `java.io.tmpdir`, so shared builds keep one on-disk
-  * layout, behind one module.
+  * Temp-dir gate: only `Materialize` and the warehouse-dir default in
+  * `GraftSession` name `java.io.tmpdir`, so shared builds keep one
+  * on-disk layout, behind one module.
+  *
+  * Session gate: `GraftSession.builder` is the one place that builds a
+  * `SparkSession`, and the library installs no session extension or
+  * extra optimizer rule, so every entry point and spec plans under the
+  * same settings and rules.
   *
   * Test temp-dir gate: specs make scratch directories only through
   * `SparkSpec.tempDir`, which puts them under one per-JVM root that is
@@ -108,13 +113,11 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("only Materialize and the warehouse defaults name java.io.tmpdir") {
     // the on-disk layout of shared builds stays behind one module
     val main = Paths.get("src/main/scala")
-    val warehouseSites =
-      Set("graft/GraftSession.scala", "graft/Bench.scala", "graft/Verify.scala")
     val offenders = scalaFiles(main).flatMap { p =>
       val f = main.relativize(p).toString
       val t = stripComments(new String(Files.readAllBytes(p), "UTF-8"))
       val named = "java\\.io\\.tmpdir".r.findAllMatchIn(t).count { m =>
-        !(warehouseSites(f) && t.startsWith("\")}/graft-warehouse", m.end))
+        !(f == "graft/GraftSession.scala" && t.startsWith("\")}/graft-warehouse", m.end))
       }
       if (named == 0 || f == "graft/operators/Materialize.scala") None
       else Some(s"$f: $named")
@@ -122,6 +125,29 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "java.io.tmpdir named outside Materialize (build under " +
         "Materialize.buildOnce instead):\n" + offenders.mkString("\n"))
+  }
+
+  test("sessions are built only by GraftSession.builder, with no extensions") {
+    // one set of session settings for Bench, Verify and the specs
+    val builders = Seq("src/main/scala", "src/test/scala").flatMap { r =>
+      scalaFiles(Paths.get(r)).filter { p =>
+        val t = stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+        """\bSparkSession\s*\.\s*builder\b""".r.findFirstIn(t).isDefined
+      }.map(_.toString)
+    }
+    assert(builders == Seq(Paths.get("src/main/scala/graft/GraftSession.scala").toString),
+      "sessions built outside GraftSession.builder (call it instead):\n" +
+        builders.mkString("\n"))
+    // a rule only some sessions install makes plans depend on who built them
+    val main = Paths.get("src/main/scala")
+    val installs = scalaFiles(main).flatMap { p =>
+      val t = stripComments(new String(Files.readAllBytes(p), "UTF-8"))
+      Seq("spark.sql.extensions", "extraOptimizations").filter(t.contains)
+        .map(k => s"${main.relativize(p)}: $k")
+    }
+    assert(installs.isEmpty,
+      "session extensions or extra optimizer rules in src/main:\n" +
+        installs.mkString("\n"))
   }
 
   test("specs create temp directories only through SparkSpec.tempDir") {

@@ -30,14 +30,7 @@ object SparkSpec {
     // after every `sbt test` (r14 verdict housekeeping ask)
     val scratch = tempDir("graft-test-scratch")
     System.setProperty("derby.system.home", scratch.toString)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        scratch.resolve("spark-warehouse").toString)
+    val s = GraftSession.builder(4, scratch.resolve("spark-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -13,6 +13,16 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out.toSeq == Seq(3, 0, 0, 1))
   }
 
+  test("fingerprint: md5 of the trimmed text; qualityScore lies in (0, 1]") {
+    val df = Seq(" x ", "x", "y").toDF("t")
+    val fps = df.select(fingerprint($"t")).as[String].collect().toSeq
+    assert(fps == Seq("x", "x", "y")
+      .map(s => org.apache.commons.codec.digest.DigestUtils.md5Hex(s)))
+    val q = Seq("the quick brown fox and the lazy dog of june").toDF("t")
+      .select(qualityScore($"t")).as[Double].head()
+    assert(q > 0.0 && q <= 1.0, s"q=$q")
+  }
+
   test("wordShingles: k-windows, short text → empty") {
     val sh = Seq("a b c d").toDF("t")
       .select(wordShingles($"t", 3)).as[Seq[String]].head()

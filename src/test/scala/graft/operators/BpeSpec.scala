@@ -49,6 +49,11 @@ class BpeSpec extends SparkSpec {
     }
     // blank text encodes to the empty array, not null
     assert(got(5L) == Seq.empty)
+    // a hand-written merge table: the -> the; lowest -> low est
+    val fixed = Seq(("t", "h"), ("th", "e"), ("e", "s"), ("es", "t"),
+      ("l", "o"), ("lo", "w"))
+    assert(Seq("the lowest rate").toDF("text").select(Bpe.encode($"text", fixed))
+      .as[Seq[String]].head() == Seq("the", "low", "est", "r", "a", "t", "e"))
   }
 
   test("subword concatenation reconstructs every word (unicode included)") {
@@ -91,6 +96,10 @@ class BpeSpec extends SparkSpec {
     assert(got(1L) == Seq(5, 3, 4, -1, -1))
     assert(got(2L) == Seq.empty)
     assert(got(3L) == Seq(2, 4)) // c, ab
+    // an explicit unkId replaces the -1 default
+    assert(df.filter($"id" === 1L)
+      .select(Bpe.encodeIds($"text", merges, vocab, unkId = 99))
+      .as[Seq[Int]].head() == Seq(5, 3, 4, 99, 99))
     // differential vs the pure replica on arbitrary words
     for (w <- Seq("ababc", "zzz", "abcabc", "q")) {
       val viaDf = Seq((0L, w)).toDF("id", "text")
@@ -108,32 +117,5 @@ class BpeSpec extends SparkSpec {
     val corpus = Seq((1L, "dcba abcd")).toDF("id", "text")
     val fromCorpus = Bpe.vocabularyFromCorpus(corpus, "text", Seq(("a", "b")))
     assert(fromCorpus == Seq("a", "b", "c", "d", "ab"))
-  }
-
-  test("graft_bpe_encode works from SQL with a literal merge table") {
-    graft.GraftExtensions.register(spark)
-    val r = spark.sql(
-      "SELECT graft_bpe_encode('the lowest rate', " +
-        "array('t h', 'th e', 'e s', 'es t', 'l o', 'lo w')) AS sub").head()
-    // the: t,h -> th -> the; lowest: e,s -> es,t -> l,o -> lo,w -> low est
-    assert(r.getSeq[String](0) ==
-      Seq("the", "low", "est", "r", "a", "t", "e"))
-    // non-literal merge table -> clear error
-    val e = intercept[Exception] {
-      spark.sql("SELECT graft_bpe_encode('x', array(CAST(rand() AS STRING)))").head()
-    }
-    assert(e.getMessage.contains("literal"), e.getMessage)
-    // malformed entry -> clear error
-    val e2 = intercept[Exception] {
-      spark.sql("SELECT graft_bpe_encode('x', array('nospace'))").head()
-    }
-    assert(e2.getMessage.contains("left right"), e2.getMessage)
-    // the id variant, with and without the unk override
-    val ids = spark.sql(
-      "SELECT graft_bpe_encode_ids('ab Q', array('a b'), array('a','b','ab')) AS x, " +
-        "graft_bpe_encode_ids('ab Q', array('a b'), array('a','b','ab'), 99) AS y")
-      .head()
-    assert(ids.getSeq[Int](0) == Seq(2, -1))
-    assert(ids.getSeq[Int](1) == Seq(2, 99))
   }
 }

@@ -24,6 +24,9 @@ class CleanOpsSpec extends SparkSpec {
     val nfd = Seq("caf\u00e9").toDF("t")
       .select(CleanOps.normalize(col("t"), "NFD")).as[String].head()
     assert(nfd == "cafe\u0301")
+    val nfc = Seq("cafe\u0301").toDF("t")
+      .select(CleanOps.normalize(col("t"))).as[String].head()
+    assert(nfc == "caf\u00e9")
     val nfkc = Seq("\ufb01n").toDF("t")
       .select(CleanOps.normalize(col("t"), "NFKC")).as[String].head()
     assert(nfkc == "fin")
@@ -46,6 +49,7 @@ class CleanOpsSpec extends SparkSpec {
     assert(clean("a\n\n\n\n\nb") == "a\n\nb")
     assert(clean("  a b  ") == "a b")
     assert(clean(" \n \t\n ") == "")
+    assert(clean("  a\u200b  b\r\n\r\n\r\nc ") == "a b\n\nc")
   }
 
   test("a single blank line (paragraph break) is preserved") {
@@ -74,6 +78,7 @@ class CleanOpsSpec extends SparkSpec {
     // double-encoded decodes exactly ONE level (&amp; applied last)
     assert(strip("&amp;amp; &amp;lt;") == "&amp; &lt;")
     assert(strip("no markup at all") == "no markup at all")
+    assert(strip("<p>x &amp; y</p>") == " x & y ")
   }
 
   test("stripHtml composed with cleanText yields tidy text") {

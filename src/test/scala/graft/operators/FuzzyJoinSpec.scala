@@ -92,6 +92,13 @@ class FuzzyJoinSpec extends SparkSpec {
     // dedup is real: no duplicate keys emitted even for runs
     for ((compiled, _) <- rows)
       assert(compiled.distinct == compiled)
+    // the key sets at both radii, by hand
+    val abc = Seq("abc").toDF("s").select(
+        org.apache.spark.sql.graft.DeletionNeighborhood($"s"),
+        org.apache.spark.sql.graft.DeletionNeighborhood($"s", 2))
+      .as[(Seq[String], Seq[String])].head()
+    assert(abc._1.toSet == Set("abc", "bc", "ac", "ab"))
+    assert(abc._2.toSet == Set("abc", "bc", "ac", "ab", "a", "b", "c"))
   }
 
   test("null ids and null strings are dropped") {

@@ -47,6 +47,8 @@ class QualityOpsSpec extends SparkSpec {
       (3L, "https://spam.example.good/z"), // host is spam.example.good: kept
       (4L, "not a url")
     ).toDF("id", "url")
+    assert(rows.select(QualityOps.extractDomain($"url")).as[String].collect().toSeq ==
+      Seq("good.example", "spam.example", "spam.example.good", ""))
     val blocked = Seq("spam.example").toDF("domain")
     val kept = QualityOps.filterBlockedDomains(rows, "url", blocked)
     assert(kept.select("id").as[Long].collect().toSet == Set(1L, 3L, 4L))

@@ -6,7 +6,7 @@ import graft.SparkSpec
 
 /** The whole-operator extension surface: custom LogicalPlan + Strategy
   * + two-phase SparkPlan (org.apache.spark.sql.graft.TopKPerKey),
-  * reachable through ScaleOps.topKPerKey and GraftExtensions. */
+  * reachable through ScaleOps.topKPerKey. */
 class TopKPerKeySpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,9 +63,9 @@ class TopKPerKeySpec extends SparkSpec {
     }
   }
 
-  test("strategy registers via GraftExtensions.register, idempotently") {
-    graft.GraftExtensions.register(spark)
-    graft.GraftExtensions.register(spark)
+  test("strategy registers via TopKPerKey.ensureStrategy, idempotently") {
+    org.apache.spark.sql.graft.TopKPerKey.ensureStrategy(spark)
+    org.apache.spark.sql.graft.TopKPerKey.ensureStrategy(spark)
     val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     assert(s.experimental.extraStrategies
       .count(_ == org.apache.spark.sql.graft.TopKPerKeyStrategy) == 1)

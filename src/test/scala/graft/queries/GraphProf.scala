@@ -9,7 +9,8 @@ import graft.operators.GraphOps
 object GraphProf {
   def main(a: Array[String]): Unit = {
     val d = if (a.nonEmpty) a(0) else "/root/testdata/sf0.1"
-    val s = GraftSession.get()
+    val s = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
